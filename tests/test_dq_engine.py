@@ -136,6 +136,50 @@ def test_audit_roundtrip(clean_df, spark, tmp_path):
     assert w.latest_gate_blocked(spark, "silver") is None
 
 
+def test_audit_appends_read_back_across_files(clean_df, spark, tmp_path):
+    """Each gate append is its own parquet file: one whose
+    metric/threshold are all NULL (a RangeCheck gate), one where they
+    are set, and one whose literal columns are NON-nullable (a bare
+    ``F.lit`` build, no schema cast). Read together they keep the audit
+    schema, and the latest-run rollup still spans every file."""
+    from wikistream_event_data_pipeline_aws_spark.dq.audit import AuditWriter
+
+    w = AuditWriter(str(tmp_path))
+    range_gate = DQSuite("bronze", [RangeCheck("value", min_value=0.0)]).run(clean_df, "run_001")
+    assert [(r.metric, r.threshold) for r in range_gate.results] == [(None, None)]
+    w.write_gate(spark, range_gate, "2024-01-01")
+    assert w.latest_gate_blocked(spark, "bronze") is False
+
+    bad = clean_df.withColumn("event_id", F.lit(None).cast("long"))
+    w.write_gate(spark, suite().run(bad, "run_002"), "2024-01-02")
+    assert w.latest_gate_blocked(spark, "bronze") is True
+
+    row = {
+        "run_id": "run_003", "check_name": "completeness(event_id)",
+        "column": "event_id", "status": "PASSED", "metric": 1.0,
+        "threshold": 1.0, "details": "ok", "run_date": "2024-01-03", "layer": "bronze",
+    }
+    non_null = spark.range(0, 1, 1, 1).select(*[F.lit(v).alias(k) for k, v in row.items()])
+    assert not any(f.nullable for f in non_null.schema.fields)
+    non_null.write.mode("append").partitionBy("run_date", "layer").parquet(
+        str(tmp_path / "dq_audit" / "quality_results")
+    )
+    assert w.latest_gate_blocked(spark, "bronze") is False
+
+    res = w.read_results(spark)
+    types = dict(res.dtypes)
+    assert (types["metric"], types["threshold"]) == ("double", "double")
+    assert all(types[c] == "string" for c in ("run_id", "status", "details", "run_date", "layer"))
+    by_run = {}
+    for r in res.collect():
+        by_run.setdefault(r.run_id, []).append(r)
+    assert sorted(by_run) == ["run_001", "run_002", "run_003"]
+    assert [(r.metric, r.threshold) for r in by_run["run_001"]] == [(None, None)]
+    rates = {r.check_name: (r.status, r.metric, r.threshold) for r in by_run["run_002"]}
+    assert rates["completeness(event_id)"] == ("FAILED", 0.0, 1.0)
+    assert [(r.metric, r.threshold, r.run_date) for r in by_run["run_003"]] == [(1.0, 1.0, "2024-01-03")]
+
+
 def test_dq_profile_value_empty_events(spark, tmp_path):
     """Zero input rows: the profile short-circuits to a null-filled row
     instead of TypeError-ing on None histogram bounds."""

@@ -117,6 +117,33 @@ def test_upsert_parquet_partition_scoped_rewrite(spark, tmp_path):
     ]
 
 
+def test_upsert_parquet_row_count_is_observed_on_the_write(spark, tmp_path):
+    """The returned count is observed on the write itself: a cold merge
+    with ``order_by`` and ``partition_by`` counts the deduplicated rows it
+    wrote, and a partition-scoped re-merge counts the rows of the
+    partitions it rewrote, not the whole table."""
+    path = str(tmp_path / "otbl")
+    cold = _pdf(spark, [
+        (1, "a", 1, "d1"), (1, "a2", 2, "d1"),  # intra-batch duplicate key
+        (2, "b", 1, "d2"), (2, "b0", 0, "d2"), (2, "b2", 2, "d2"),
+        (3, "c", 1, "d3"), (4, "e", 1, "d3"),
+    ])
+    n = upsert_parquet(spark, path, cold, ["k"], order_by=["version"], partition_by=["pt"])
+    assert n == 4 == spark.read.parquet(path).count()
+    assert _sorted(spark.read.parquet(path)) == [
+        (1, "a2", 2, "d1"), (2, "b2", 2, "d2"), (3, "c", 1, "d3"), (4, "e", 1, "d3"),
+    ]
+    # touches d1 (update k=1) and d3 (insert k=5); d2 is neither read nor written
+    n = upsert_parquet(
+        spark, path,
+        _pdf(spark, [(1, "a3", 3, "d1"), (5, "f", 1, "d3"), (5, "f0", 0, "d3")]),
+        ["k"], order_by=["version"], partition_by=["pt"],
+    )
+    table = spark.read.parquet(path)
+    assert n == 4 == table.filter(F.col("pt").isin("d1", "d3")).count()
+    assert table.count() == 5
+
+
 def test_insert_only_parquet_replay_leaves_files_untouched(spark, tmp_path):
     from wikistream_event_data_pipeline_aws_spark.operators.merge import (
         insert_only_parquet,

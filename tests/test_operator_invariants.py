@@ -2322,3 +2322,38 @@ def test_substring_rewrite_collapses_clones_and_hashes_survivors(spark, sf_dir):
             assert orig.rewritten_md5 == hashlib.md5(joined.encode()).hexdigest()
     for r in rows.values():
         assert 0 <= r.n_removed <= r.n_tokens
+
+
+def test_jaccard_pairs_dedupes_repeated_shingle_rows(spark):
+    """``jaccard_pairs(shingles=)`` takes a set of (id, shingle) rows: a
+    raw exploded table, whose repeated windows and repeated rows would
+    inflate n_shared and n_shingles, scores exactly like its distinct
+    form and like the explode-inside path."""
+    from wikistream_event_data_pipeline_aws_spark.operators.textops import (
+        exploded_shingles,
+        jaccard_pairs,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (1, "a b c a b c a b c d"),
+            (2, "a b c d e f"),
+            (3, "x y z a b c a b c"),
+            (4, "q r s t"),
+        ],
+        "doc_id long, text string",
+    )
+    raw = exploded_shingles(docs, "doc_id", "text", k=3)
+    repeated = raw.unionByName(raw)
+
+    def scores(df):
+        return sorted(
+            (r.id_a, r.id_b, r.n_shared, r.n_a, r.n_b, r.jaccard)
+            for r in df.collect()
+        )
+
+    expect = scores(jaccard_pairs(docs, "doc_id", "text", k=3, shingles=raw.distinct()))
+    assert expect == scores(jaccard_pairs(docs, "doc_id", "text", k=3))
+    assert scores(jaccard_pairs(docs, "doc_id", "text", k=3, shingles=repeated)) == expect
+    # doc 1 {abc, bca, cab, bcd} vs doc 2 {abc, bcd, cde, def}: 2 / 6
+    assert (1, 2, 2, 4, 4, 2 / 6) in expect

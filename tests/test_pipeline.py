@@ -47,6 +47,49 @@ def test_cycles_are_idempotent(spark, sf_dir, warehouse):
     assert silver_n == load_table(spark, sf_dir, "events").count()
 
 
+def test_second_cycle_drifts_against_first_cycles_profile(spark, sf_dir, warehouse):
+    """silver_dq appends each cycle's silver profile to profile_metrics
+    and compares null rates against every OTHER run's stored rows, so in
+    a two-cycle run_loop the second cycle's baseline is the first
+    cycle's profile. Between the cycles half of the events lose their
+    user_id (a JVM system property the source reads, set by the metrics
+    sink when cycle 1 ends); cycle 2 must report user_id drift against
+    the null rate cycle 1 stored."""
+    prop = "wikistream.test.null_half_users"
+    jsystem = spark._jvm.java.lang.System
+    nulled = F.expr(f"reflect('java.lang.System', 'getProperty', '{prop}')") == "on"
+    source = load_table(spark, sf_dir, "events").withColumn(
+        "user_id",
+        F.when(nulled & (F.col("event_id") % 2 == 0), F.lit(None)).otherwise(F.col("user_id")),
+    )
+
+    class NullUsersAfterFirstCycle:
+        def emit(self, name, value, tags):
+            if name == "pipeline.gold_dq.seconds":
+                jsystem.setProperty(prop, "on")
+
+    try:
+        reports = Pipeline(spark, warehouse, metrics_sink=NullUsersAfterFirstCycle()).run_loop(
+            cycles=2, source=source
+        )
+    finally:
+        jsystem.clearProperty(prop)
+    first, second = (r.step("silver_dq") for r in reports)
+    assert first.status == second.status == "OK"
+    assert first.details == ""  # no other run to compare against yet
+
+    prof = spark.read.parquet(f"{warehouse}/dq_audit/profile_metrics")
+    assert prof.dtypes == [
+        ("run_id", "string"), ("column", "string"), ("null_rate", "double"),
+        ("approx_distinct", "bigint"), ("mean", "double"),
+    ]
+    rates = {(r.run_id, r.column): r.null_rate for r in prof.collect()}
+    base = rates[(reports[0].run_id, "user_id")]
+    cur = rates[(reports[1].run_id, "user_id")]
+    assert cur - base > 0.20
+    assert second.details == f"user_id: null_rate drift {cur} vs {base}"
+
+
 def test_corrupt_bronze_blocks_pipeline(spark, sf_dir, warehouse):
     events = load_table(spark, sf_dir, "events")
     # corruption must SURVIVE ingestion: duplicate keys are swallowed by

@@ -30,9 +30,11 @@ class AuditWriter:
         return os.path.join(self.warehouse_dir, "dq_audit", table)
 
     def write_gate(self, spark: SparkSession, gate: DQGateResult, run_date: str) -> None:
-        df = results_df(spark, gate).withColumn("run_date", F.lit(run_date))
+        # results_df is one partition, so the append is one job of one
+        # task with no shuffle
         (
-            df.repartition(1)
+            results_df(spark, gate)
+            .withColumn("run_date", F.lit(run_date))
             .write.mode("append")
             .partitionBy("run_date", "layer")
             .parquet(self._path("quality_results"))

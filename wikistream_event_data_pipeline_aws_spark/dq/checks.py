@@ -24,6 +24,7 @@ from typing import Any, Sequence
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 PASSED = "PASSED"
 WARNING = "WARNING"
@@ -297,25 +298,43 @@ class DQSuite:
         return gate
 
 
+RESULTS_SCHEMA = T.StructType(
+    [
+        T.StructField("run_id", T.StringType()),
+        T.StructField("layer", T.StringType()),
+        T.StructField("check_name", T.StringType()),
+        T.StructField("column", T.StringType()),
+        T.StructField("status", T.StringType()),
+        T.StructField("metric", T.DoubleType()),
+        T.StructField("threshold", T.DoubleType()),
+        T.StructField("details", T.StringType()),
+    ]
+)
+
+
+def literal_rows_df(
+    spark: SparkSession, rows: Sequence[dict[str, Any]], schema: T.StructType
+) -> DataFrame:
+    """A few driver-built rows as a one-partition DataFrame built in the
+    JVM: one literal struct per row, inlined over a one-row range.
+
+    ``spark.createDataFrame`` on a Python list plans a Python RDD, so the
+    first write of it starts the Python worker pool — seconds of start-up
+    for a handful of audit rows, in a job nothing else in the medallion
+    cycle needs. Literals also need no ``repartition(1)`` to land in one
+    file: the range has one partition. The array cast applies the
+    schema's names and (nullable) field types, so every file written
+    from here has the same parquet schema, empty ``rows`` included."""
+    structs = [
+        F.struct(*[F.lit(r[f.name]).cast(f.dataType) for f in schema.fields])
+        for r in rows
+    ]
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(F.array(*structs).cast(T.ArrayType(schema)))
+    )
+
+
 def results_df(spark: SparkSession, gate: DQGateResult) -> DataFrame:
     """Materialize gate results for audit persistence (reference S13/Q16,
     ``dq_utils.py:154-196``)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("run_id", T.StringType()),
-            T.StructField("layer", T.StringType()),
-            T.StructField("check_name", T.StringType()),
-            T.StructField("column", T.StringType()),
-            T.StructField("status", T.StringType()),
-            T.StructField("metric", T.DoubleType()),
-            T.StructField("threshold", T.DoubleType()),
-            T.StructField("details", T.StringType()),
-        ]
-    )
-    rows = gate.to_rows()
-    for r in rows:
-        r["metric"] = float(r["metric"]) if r["metric"] is not None else None
-        r["threshold"] = float(r["threshold"]) if r["threshold"] is not None else None
-    return spark.createDataFrame(rows, schema)
+    return literal_rows_df(spark, gate.to_rows(), RESULTS_SCHEMA)

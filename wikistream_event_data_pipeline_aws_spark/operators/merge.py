@@ -37,7 +37,7 @@ from __future__ import annotations
 import functools
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -224,6 +224,18 @@ def upsert_parquet(
     3-minute micro-batch cadence at 100 TB. Unpartitioned tables fall
     back to full copy-on-write. Returns the number of rows written.
 
+    When the checkpoint runs: only when ``path`` already exists. Those
+    merges read the files they overwrite, so the merged rows are first
+    materialized with an eager ``localCheckpoint`` (a lineage cut) and
+    the write reads the checkpoint. A cold merge (no table yet) reads no
+    target and writes the source, deduplicated when ``order_by`` is
+    given, straight to ``path`` in one job (plus the dedup's shuffle).
+
+    Where the row count comes from: an ``Observation`` of ``count(1)``
+    on the write itself, collected as the write runs rather than by a
+    separate ``count()`` job. It counts exactly the rows written — on
+    the scoped path, the rows of the touched partitions only.
+
     Contract for the scoped path: the partition value must be stable per
     merge key (true for every event_date-partitioned pipeline table —
     event_date is derived from the event timestamp).
@@ -232,26 +244,27 @@ def upsert_parquet(
         merged = (
             dedup_keep_one(source, keys, order_by, keep="last") if order_by else source
         )
-    elif partition_by:
-        target = spark.read.parquet(path).filter(
-            source_partition_filter(source, partition_by)
-        )
-        merged = merge_upsert(target, source, keys, order_by)
     else:
-        merged = merge_upsert(spark.read.parquet(path), source, keys, order_by)
-    # break lineage before overwriting the path we read from (cache alone
-    # can be evicted and recompute against the clobbered files)
-    merged_rows = merged.localCheckpoint(eager=True)
-    n = merged_rows.count()
-    writer = merged_rows.write.mode("overwrite")
+        target = spark.read.parquet(path)
+        if partition_by:
+            target = target.filter(source_partition_filter(source, partition_by))
+        # break lineage before overwriting the path we read from (cache
+        # alone can be evicted and recompute against the clobbered files)
+        merged = merge_upsert(target, source, keys, order_by).localCheckpoint(
+            eager=True
+        )
+    written = Observation()
+    writer = merged.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    )
     if partition_by:
-        # dynamic mode replaces only the partitions present in merged_rows;
+        # dynamic mode replaces only the partitions present in merged;
         # every other partition's files are untouched
         writer = writer.option("partitionOverwriteMode", "dynamic").partitionBy(
             *partition_by
         )
     writer.parquet(path)
-    return n
+    return written.get["rows"]
 
 
 def insert_only_parquet(

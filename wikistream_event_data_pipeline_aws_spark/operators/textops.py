@@ -231,13 +231,15 @@ def jaccard_pairs(
 ) -> DataFrame:
     """n-gram Jaccard similarity for (candidate) pairs sharing >=1
     shingle. Without ``candidates`` every co-shingled pair is scored.
-    ``shingles``: a pre-built DISTINCT (id, shingle) table to reuse
-    instead of re-exploding the corpus (only valid without
-    ``candidates``, whose semi-join must subset the docs first)."""
+    ``shingles``: a pre-built (id, shingle) table to reuse instead of
+    re-exploding the corpus (only valid without ``candidates``, whose
+    semi-join must subset the docs first). It is deduplicated here, since
+    a repeated (id, shingle) row would inflate both the shared and the
+    per-doc shingle counts."""
     if shingles is not None:
         if candidates is not None:
             raise ValueError("shingles= cannot be combined with candidates=")
-        sh = shingles.localCheckpoint(eager=False)
+        sh = shingles.select(id_col, "shingle").distinct().localCheckpoint(eager=False)
         sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
         a, b = sh.alias("a"), sh.alias("b")
         shared = (

@@ -32,6 +32,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .catalog import DEFAULT_SF_DIR, load_table
 from .dq.audit import AuditWriter
@@ -45,6 +46,7 @@ from .dq.checks import (
     RangeCheck,
     Recompute,
     Uniqueness,
+    literal_rows_df,
 )
 from .dq.profiler import profile_columns
 from .operators.merge import dedup_keep_one, upsert_parquet
@@ -58,6 +60,15 @@ from .plans.wiki import (
 
 EVENT_TYPES = ("click", "view", "purchase", "signup", "error", "unknown")
 SCHEMA_VERSION = "1.0"
+PROFILE_SCHEMA = T.StructType(
+    [
+        T.StructField("run_id", T.StringType()),
+        T.StructField("column", T.StringType()),
+        T.StructField("null_rate", T.DoubleType()),
+        T.StructField("approx_distinct", T.LongType()),
+        T.StructField("mean", T.DoubleType()),
+    ]
+)
 
 
 @dataclass
@@ -331,17 +342,16 @@ class Pipeline:
             {
                 "run_id": run_id,
                 "column": p.column,
-                "null_rate": float(p.null_rate),
-                "approx_distinct": int(p.approx_distinct),
-                "mean": float(p.mean) if p.mean is not None else None,
+                "null_rate": p.null_rate,
+                "approx_distinct": p.approx_distinct,
+                "mean": p.mean,
             }
             for p in profiles
         ]
         prof_path = os.path.join(self.warehouse, "dq_audit", "profile_metrics")
-        self.spark.createDataFrame(
-            prof_rows,
-            "run_id string, column string, null_rate double, approx_distinct bigint, mean double",
-        ).repartition(1).write.mode("append").parquet(prof_path)
+        literal_rows_df(self.spark, prof_rows, PROFILE_SCHEMA).write.mode(
+            "append"
+        ).parquet(prof_path)
         drift_notes = []
         baseline = (
             self.spark.read.parquet(prof_path)

@@ -1160,9 +1160,12 @@ def _seed_simhash_caches_fused(spark: SparkSession, sf_dir: str) -> None:
     (``operators/textops.simhash_fused`` — pinned bit-for-bit identical
     to the single-width builds by the invariants suite) and seed both
     caches in the exact format their owners store. No-op whenever
-    either cache is already warm (the bench battery's case, where the
-    owner queries run first), so in-battery behavior is unchanged; the
-    s16 fail-fast envelope still runs per call in
+    either cache is already warm. In the bench battery's sorted order
+    that is always so because ``dedup_method_agreement`` runs before
+    ``dedup_sim16_agreement`` and warms the s60 cache (the owner queries
+    ``dedup_simhash_band60``/``dedup_simhash_pairs`` sort after it, so
+    they are not the reason). In-battery behavior is therefore
+    unchanged; the s16 fail-fast envelope still runs per call in
     ``_simhash16_pairs_shared`` against the seeded signature count."""
     from ..operators.memo import file_fingerprint, log_memo_event, register_cache
     from ..operators.textops import simhash_fused
