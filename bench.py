@@ -433,6 +433,36 @@ def warmup(spark, sf_dir: str, qs: dict) -> None:
     ).count()
 
 
+def _retry_candidates(spark, sf_dir, qs, prev_q, timings, scale, memo_builds) -> list[dict]:
+    """Re-run each gate candidate, keeping its best time, and return the
+    regressions that survive. Each candidate retries until it clears its
+    own threshold or the budget runs out; a real plan regression never
+    clears no matter how many draws. r14 (VERDICT r13 item 9): budget
+    re-tightened 5 -> 3 — the five documented r13 false firings were all
+    against STALE all-history floors (e.g. a 1.05s one-off from a
+    retired bench format); the windowed 25-run baseline ages those out,
+    and best-of-3 keeps the gate's sensitivity to a genuine ~2x
+    regression without re-admitting the tail-draw flakes.
+
+    A candidate whose timed run built a session-memo kernel
+    (``memo_builds``, from its MEMO_EVENTS slice) has the memos reset
+    before every retry: served from the memo its timed run left behind,
+    a retry would time only the consumer and hide a kernel regression."""
+    from wikistream_event_data_pipeline_aws_spark.operators import memo
+
+    for cand in _regressions(prev_q, timings, scale):
+        name = cand["query"]
+        for _ in range(3):
+            if name in memo_builds:
+                memo.reset_memos()
+            t0 = time.perf_counter()
+            qs[name](spark, sf_dir).count()
+            timings[name] = round(min(timings[name], time.perf_counter() - t0), 4)
+            if not _regressions({name: prev_q[name]}, {name: timings[name]}, scale):
+                break
+    return _regressions(prev_q, timings, scale)
+
+
 def _timed(spark, sf_dir, cpus, qs, contended, load1, host_index) -> None:
     timings: dict[str, float] = {}
     # Stateful streaming queries pay a state-store/MicroBatchExecution
@@ -454,12 +484,20 @@ def _timed(spark, sf_dir, cpus, qs, contended, load1, host_index) -> None:
 
     memo_hits: dict[str, list[str]] = {}
     memo_builds: dict[str, list[str]] = {}
+    # code generation as its own share of each query's seconds: classes
+    # compiled during the query's timed runs and the seconds spent
+    # compiling them (0 when every plan hit the generated-code cache)
+    from wikistream_event_data_pipeline_aws_spark.session import codegen_compiles
+
+    codegen_classes: dict[str, int] = {}
+    codegen_s: dict[str, float] = {}
 
     ticks_before = _cpu_ticks()
     for name in sorted(qs):
         fn = qs[name]
         runs: list[float] = []
         ev0 = len(memo.MEMO_EVENTS)
+        cg0 = codegen_compiles(spark)
         for _ in range(noisy_repeats if name in noisy else 1):
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
@@ -468,6 +506,9 @@ def _timed(spark, sf_dir, cpus, qs, contended, load1, host_index) -> None:
             if n < 0:  # pragma: no cover - count() is always >= 0
                 raise RuntimeError(name)
         timings[name] = round(sorted(runs)[len(runs) // 2], 4)
+        cg1 = codegen_compiles(spark)
+        codegen_classes[name] = cg1[0] - cg0[0]
+        codegen_s[name] = round(cg1[1] - cg0[1], 4)
         if len(runs) > 1:
             noisy_runs[name] = [round(r, 4) for r in runs]
         events = memo.MEMO_EVENTS[ev0:]
@@ -524,29 +565,9 @@ def _timed(spark, sf_dir, cpus, qs, contended, load1, host_index) -> None:
                 f"({scale:.2f}x) — gate comparisons scaled accordingly",
                 file=sys.stderr,
             )
-        for cand in _regressions(prev["queries"], timings, scale):
-            name = cand["query"]
-            # retry until the candidate clears its own threshold or the
-            # budget runs out; a real plan regression never clears no
-            # matter how many draws. r14 (VERDICT r13 item 9): budget
-            # re-tightened 5 -> 3 — the five documented r13 false
-            # firings were all against STALE all-history floors (e.g. a
-            # 1.05s one-off from a retired bench format); the windowed
-            # 25-run baseline ages those out, and this round's quiet
-            # runs produced zero candidates, so best-of-3 keeps the
-            # gate's sensitivity to a genuine ~2x regression without
-            # re-admitting the tail-draw flakes
-            for _ in range(3):
-                t0 = time.perf_counter()
-                qs[name](spark, sf_dir).count()
-                timings[name] = round(
-                    min(timings[name], time.perf_counter() - t0), 4
-                )
-                if not _regressions(
-                    {name: prev["queries"][name]}, {name: timings[name]}, scale
-                ):
-                    break
-        regressed = _regressions(prev["queries"], timings, scale)
+        regressed = _retry_candidates(
+            spark, sf_dir, qs, prev["queries"], timings, scale, memo_builds
+        )
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     result = {
@@ -566,6 +587,9 @@ def _timed(spark, sf_dir, cpus, qs, contended, load1, host_index) -> None:
     if noisy_runs:
         # file-only detail: the individual runs behind each median
         result["noisy_query_runs"] = noisy_runs
+    # file-only detail: per-query code generation (see the timed loop)
+    result["codegen_classes"] = codegen_classes
+    result["codegen_s"] = codegen_s
     if memo_hits:
         # file-only detail (VERDICT r13 item 3): which timed entries were
         # served by a session-memoized kernel, and who built each kernel
@@ -633,6 +657,8 @@ def _timed(spark, sf_dir, cpus, qs, contended, load1, host_index) -> None:
     printed.pop("noisy_query_runs", None)
     printed.pop("memo_hits", None)  # file-only: BENCH_OUT.json
     printed.pop("memo_builds", None)
+    printed.pop("codegen_classes", None)
+    printed.pop("codegen_s", None)
     printed["queries"] = {k: round(v, 3) for k, v in timings.items()}
     line = json.dumps(printed, separators=(",", ":"))
     if len(line) > budget:

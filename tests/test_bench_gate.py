@@ -362,3 +362,44 @@ def test_robust_baseline_refuses_rising_floors(tmp_path):
     r = subprocess.run(cmd + ["--allow-rising-floors"], capture_output=True, text=True)
     assert r.returncode == 0, r.stdout + r.stderr
     assert json.loads(out.read_text())["queries"]["q1"] == 3.0
+
+
+def test_gate_retry_rebuilds_memo_kernel_the_timed_run_built(monkeypatch):
+    """A candidate whose timed run built a session-memo kernel is retried
+    from reset memos: a retry served by the memo that run left behind
+    times only the consumer, so a kernel regression would clear the gate
+    on its first retry."""
+    import bench
+    from wikistream_event_data_pipeline_aws_spark.operators import memo
+
+    clock = [0.0]
+    monkeypatch.setattr(bench.time, "perf_counter", lambda: clock[0])
+    kernel: dict = memo.register_cache({})
+
+    class Result:
+        def count(self):
+            if not kernel:  # build the (regressed) kernel: 3s
+                clock[0] += 3.0
+                kernel["k"] = True
+                memo.log_memo_event("build", "k")
+            else:  # memo hit: only the consumer runs
+                clock[0] += 0.1
+                memo.log_memo_event("hit", "k")
+            return 1
+
+    qs = {"consumer": lambda spark, sf_dir: Result(), "other": lambda spark, sf_dir: Result()}
+    prev = {"consumer": 1.0, "other": 1.0}
+    try:
+        # the timed run built the kernel: every retry rebuilds it and
+        # the 3x regression stands
+        timings = {"consumer": 3.0, "other": 1.0}
+        got = bench._retry_candidates(None, "/x", qs, prev, timings, 1.0, {"consumer": ["k"]})
+        assert [r["query"] for r in got] == ["consumer"]
+        assert timings["consumer"] == 3.0
+        # a timed run that was itself a memo hit keeps the memo: its
+        # retries time the same consumer-only work
+        timings = {"consumer": 3.0, "other": 1.0}
+        assert bench._retry_candidates(None, "/x", qs, prev, timings, 1.0, {}) == []
+        assert timings["consumer"] == 0.1
+    finally:
+        kernel.clear()

@@ -120,10 +120,17 @@ def test_exact_similarity_broadcasts_query_side(spark, sf_dir):
 
     import pyspark.sql.functions as F
 
+    from wikistream_event_data_pipeline_aws_spark.operators import memo
+
     e = load_table(spark, sf_dir, "embeddings")
     df = brute_force_topk(e.filter(F.col("vec_id") < N_QUERIES), e, k=TOP_K)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in plan, plan
+    # ... and the registered query is served by that function's memo
+    # (_exact_topk_shared), not by a plan of its own
+    ev0 = len(memo.MEMO_EVENTS)
+    entry.queries()["similarity_cosine_topk"](spark, sf_dir)
+    assert [label for _, label in memo.MEMO_EVENTS[ev0:]] == ["exact_topk"]
 
 
 def test_partitioned_scan_prunes_date_directories(spark, sf_dir):
