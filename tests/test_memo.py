@@ -4,6 +4,10 @@ ADVICE r13)."""
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+
 from wikistream_event_data_pipeline_aws_spark.operators import memo
 
 
@@ -106,3 +110,25 @@ def test_fused_seed_serves_both_simhash_kernels(spark):
     kinds = [k for k, lbl in memo.MEMO_EVENTS[ev1:] if "simhash" in lbl]
     assert kinds and all(k == "hit" for k in kinds), memo.MEMO_EVENTS[ev1:]
     assert after == rows_seeded
+
+
+def test_events_stream_schema_follows_an_in_place_rewrite(spark, tmp_path):
+    """The streaming queries' cached events schema is keyed on the file's
+    fingerprint: events.parquet rewritten in place with a new column
+    streams with that column."""
+    from wikistream_event_data_pipeline_aws_spark.plans import streaming_live
+
+    sf_dir = str(tmp_path / "sf")
+    os.makedirs(sf_dir)
+
+    def write_events(extra: list[str]):
+        out = str(tmp_path / "out")
+        spark.range(3).selectExpr(
+            "id AS event_id", "timestamp_micros(id) AS ts", *extra
+        ).coalesce(1).write.mode("overwrite").parquet(out)
+        shutil.copy(glob.glob(f"{out}/part-*.parquet")[0], f"{sf_dir}/events.parquet")
+
+    write_events([])
+    assert "region" not in streaming_live._events_stream(spark, sf_dir).columns
+    write_events(["'eu' AS region"])
+    assert "region" in streaming_live._events_stream(spark, sf_dir).columns

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.memo import file_fingerprint, register_cache
 from ..session import ensure_session_confs
 from ..streaming.ingest import stateful_user_counts, watermark_dedup
 
@@ -40,7 +41,9 @@ _AWAIT_S = 300
 _HARNESS_SHUFFLE_PARTITIONS = "8"
 
 
-_EVENTS_SCHEMA_CACHE: dict[str, object] = {}
+# keyed on the file fingerprint: events.parquet rewritten in place with
+# another schema must not stream under the old one
+_EVENTS_SCHEMA_CACHE: dict[tuple, object] = register_cache({})
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -49,11 +52,12 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session_confs(spark)
     path = f"{sf_dir}/events.parquet"
     # the footer-read driver job costs ~0.1s and several queries build
-    # this stream twice (both interval-join sides) — cache per sf_dir
-    schema = _EVENTS_SCHEMA_CACHE.get(path)
+    # this stream twice (both interval-join sides) — cache per file version
+    key = file_fingerprint(sf_dir, "events")
+    schema = _EVENTS_SCHEMA_CACHE.get(key)
     if schema is None:
         schema = spark.read.parquet(path).schema
-        _EVENTS_SCHEMA_CACHE[path] = schema
+        _EVENTS_SCHEMA_CACHE[key] = schema
     # FileStreamSource requires a directory basePath; glob-filter the
     # events file out of the sf_dir
     raw = (

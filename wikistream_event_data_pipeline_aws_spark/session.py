@@ -41,6 +41,29 @@ CODEGEN_CACHE_ENTRIES = 1000
 # output still shows the ids). A runtime SQL conf.
 CODEGEN_ID_IN_CLASS_NAME = "spark.sql.codegen.useIdInClassName"
 
+# Local writes never fork a shell. pyspark ships no native hadoop
+# library (libhadoop), and without it Hadoop's RawLocalFileSystem forks
+# `chmod` for every file and directory a write creates (parquet parts,
+# their .crc files, the streaming offset/commit logs and state-store
+# deltas) and `readlink` for every FileContext rename (the logs' atomic
+# commits; its argument is the `file:`-prefixed path string, which names
+# no file, so it always prints nothing). Counted with JFR
+# jdk.ProcessStart: 442 child processes per 45-file bronze drain (~147
+# per trigger) and 254 per cold medallion cycle. A forking setPermission
+# took 4.1-4.6 ms from a 1 GB driver JVM, the in-JVM one under 0.1 ms.
+# The jar's classes (jvm/src; rebuild with tools/build_localfs_jar.py)
+# make both calls with java.nio and are otherwise the stock ones: same
+# .crc checksums, modes and renames. The driver classpath is static, so
+# only get_spark sets this: ensure_session_confs cannot, because a JVM
+# the engine did not start lacks the classes. On local[N] the executors
+# share the driver JVM; a cluster deployment would also need the jar on
+# spark.executor.extraClassPath.
+LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "localfs.jar")
+LOCALFS_CONFS = {
+    "spark.hadoop.fs.file.impl": "wikistream.localfs.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "wikistream.localfs.NioLocalFs",
+}
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -90,11 +113,22 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config(CODEGEN_ID_IN_CLASS_NAME, "false")
     )
-    for k, v in (extra_confs or {}).items():
+    for k, v in with_localfs(extra_confs).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def with_localfs(confs: dict[str, str] | None) -> dict[str, str]:
+    """``confs`` plus the LOCALFS classes, with the jar appended to any
+    ``spark.driver.extraClassPath`` they already give."""
+    out = {**LOCALFS_CONFS, **(confs or {})}
+    classpath = out.get("spark.driver.extraClassPath")
+    out["spark.driver.extraClassPath"] = (
+        f"{classpath}{os.pathsep}{LOCALFS_JAR}" if classpath else LOCALFS_JAR
+    )
+    return out
 
 
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
