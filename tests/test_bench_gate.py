@@ -374,7 +374,8 @@ def test_gate_retry_rebuilds_memo_kernel_the_timed_run_built(monkeypatch):
 
     clock = [0.0]
     monkeypatch.setattr(bench.time, "perf_counter", lambda: clock[0])
-    kernel: dict = memo.register_cache({})
+    kernel: dict = {}
+    monkeypatch.setattr(memo, "reset_memos", kernel.clear)
 
     class Result:
         def count(self):

@@ -1,24 +1,41 @@
-"""operators/memo.py contract tests (r14: constants-in-key, stale-entry
-eviction, hit/build telemetry, reset_memos — VERDICT r13 item 3 +
-ADVICE r13)."""
+"""operators/memo.py contract tests: the one store behind every session
+memo and source fixture — constants-in-key, stale-fingerprint eviction,
+coexisting constant siblings, hit/build telemetry, reset_memos, fixtures
+that follow an in-place rewrite, and no cache anywhere else."""
 
 from __future__ import annotations
 
 import glob
 import os
+import re
 import shutil
+from pathlib import Path
 
 from wikistream_event_data_pipeline_aws_spark.operators import memo
+
+PACKAGE = Path(memo.__file__).resolve().parents[1]
 
 
 def _df(spark, tag: int):
     return spark.range(tag, tag + 3).selectExpr("id", f"{tag} AS tag")
 
 
-def test_constants_in_key_are_a_cache_miss(spark):
-    """A changed algorithm constant (part of the key tuple) must MISS —
-    the cached plan bakes the old constant in (ADVICE r13)."""
-    cache: dict = {}
+def _sf(tmp_path, name: str, payload: bytes = b"x") -> str:
+    """An sf_dir holding one 't' table: the fingerprint only stats it."""
+    sf = tmp_path / name
+    sf.mkdir(exist_ok=True)
+    (sf / "t.parquet").write_bytes(payload)
+    return str(sf)
+
+
+def _labels_in_store(label: str) -> list[tuple]:
+    return [k for k in memo._STORE if k[0] == label]
+
+
+def test_constants_in_key_are_a_cache_miss(spark, tmp_path):
+    """A changed algorithm constant (part of the key) must MISS — the
+    cached plan bakes the old constant in (ADVICE r13)."""
+    sf = _sf(tmp_path, "sf")
     builds = []
 
     def build(tag):
@@ -28,60 +45,123 @@ def test_constants_in_key_are_a_cache_miss(spark):
 
         return go
 
-    a = memo.session_memo(cache, spark, ("sf", "fp", 10), build(1), label="t")
-    b = memo.session_memo(cache, spark, ("sf", "fp", 20), build(2), label="t")
+    a = memo.session_memo(spark, "t_consts", sf, ("t",), (10,), build(1))
+    b = memo.session_memo(spark, "t_consts", sf, ("t",), (20,), build(2))
     assert builds == [1, 2]
     assert a.first()["tag"] == 1 and b.first()["tag"] == 2
 
 
-def test_stale_fingerprint_evicted_on_insert(spark):
-    """Same sf_dir + different fingerprint = rewritten input: the stale
-    entry must be dropped when the fresh one is inserted (ADVICE r13 —
-    no unbounded accumulation of dead checkpointed blocks)."""
-    cache: dict = {}
-    memo.session_memo(cache, spark, ("sfA", "fp_old"), lambda: _df(spark, 1))
-    memo.session_memo(cache, spark, ("sfB", "fp_b"), lambda: _df(spark, 2))
-    assert len(cache) == 2
-    memo.session_memo(cache, spark, ("sfA", "fp_new"), lambda: _df(spark, 3))
-    keys = {k[1:3] for k in cache}
-    assert ("sfA", "fp_new") in keys and ("sfB", "fp_b") in keys
-    assert ("sfA", "fp_old") not in keys  # evicted
-    assert len(cache) == 2
+def test_constant_siblings_coexist(spark, tmp_path):
+    """Two keys that differ only in a constant both stay cached and
+    both hit: a same-session constant A/B must not thrash (ADVICE)."""
+    sf = _sf(tmp_path, "sf")
+    memo.session_memo(spark, "t_sib", sf, ("t",), (10,), lambda: _df(spark, 1))
+    memo.session_memo(spark, "t_sib", sf, ("t",), (20,), lambda: _df(spark, 2))
+    assert len(_labels_in_store("t_sib")) == 2
+    ev0 = len(memo.MEMO_EVENTS)
+    a = memo.session_memo(spark, "t_sib", sf, ("t",), (10,), lambda: _df(spark, 9))
+    b = memo.session_memo(spark, "t_sib", sf, ("t",), (20,), lambda: _df(spark, 9))
+    assert memo.MEMO_EVENTS[ev0:] == [("hit", "t_sib"), ("hit", "t_sib")]
+    assert a.first()["tag"] == 1 and b.first()["tag"] == 2
 
 
-def test_memo_events_and_reset(spark):
+def test_stale_fingerprint_evicted_on_insert(spark, tmp_path):
+    """Same label + sf_dir, different fingerprint = rewritten input: the
+    stale entry must be dropped when the fresh one is inserted (ADVICE
+    r13 — no unbounded accumulation of dead checkpointed blocks)."""
+    sf_a, sf_b = _sf(tmp_path, "sfA"), _sf(tmp_path, "sfB")
+    memo.session_memo(spark, "t_stale", sf_a, ("t",), (), lambda: _df(spark, 1))
+    memo.session_memo(spark, "t_stale", sf_b, ("t",), (), lambda: _df(spark, 2))
+    assert len(_labels_in_store("t_stale")) == 2
+    _sf(tmp_path, "sfA", b"rewritten")
+    fresh = memo.session_memo(spark, "t_stale", sf_a, ("t",), (), lambda: _df(spark, 3))
+    assert fresh.first()["tag"] == 3
+    keys = _labels_in_store("t_stale")
+    assert sorted(k[2] for k in keys) == [sf_a, sf_b]
+    assert [k[3] for k in keys if k[2] == sf_a] == [(memo.file_fingerprint(sf_a, "t"),)]
+
+
+def test_memo_events_and_reset(spark, tmp_path):
     """Hit/build telemetry feeds bench's memo_hits transparency; a
     reset forces the next call to rebuild (spot_measure standalone
     floors)."""
-    cache: dict = {}
+    sf = _sf(tmp_path, "sf")
     ev0 = len(memo.MEMO_EVENTS)
-    memo.session_memo(cache, spark, ("sf", "fp"), lambda: _df(spark, 1), label="k1")
-    memo.session_memo(cache, spark, ("sf", "fp"), lambda: _df(spark, 1), label="k1")
+    memo.session_memo(spark, "k1", sf, ("t",), (), lambda: _df(spark, 1))
+    memo.session_memo(spark, "k1", sf, ("t",), (), lambda: _df(spark, 1))
     assert memo.MEMO_EVENTS[ev0:] == [("build", "k1"), ("hit", "k1")]
     memo.reset_memos()
-    assert not cache  # registered via session_memo, cleared by reset
-    memo.session_memo(cache, spark, ("sf", "fp"), lambda: _df(spark, 1), label="k1")
+    assert not _labels_in_store("k1")
+    memo.session_memo(spark, "k1", sf, ("t",), (), lambda: _df(spark, 1))
     assert memo.MEMO_EVENTS[ev0 + 2 :] == [("build", "k1")]
 
 
-def test_reset_memos_covers_the_hand_rolled_caches():
-    """The hand-rolled kernel caches (BPE pipeline/word-grain/encode,
-    simhash16) register themselves so reset_memos() clears them too —
-    the registration happens on first use, so just verify the module
-    dicts are the registered objects once plans are imported."""
-    from wikistream_event_data_pipeline_aws_spark.plans import bpe, dedup
+def test_no_cache_outside_memo_module():
+    """Every memo and fixture lives in operators/memo.py's one store: no
+    other module of the package keeps a module-level *_CACHE dict or
+    registers a cache of its own."""
+    cache_dict = re.compile(r"^_?[A-Z0-9_]*_CACHE\b[^=]*=\s*(\{|dict\(|register_cache)", re.M)
+    offenders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path == Path(memo.__file__).resolve():
+            continue
+        src = path.read_text()
+        if cache_dict.search(src) or "register_cache" in src:
+            offenders.append(str(path.relative_to(PACKAGE)))
+    assert not offenders, offenders
 
-    for cache in (
-        bpe._PIPELINE_CACHE,
-        bpe._WORDGRAIN_CACHE,
-        bpe._ENCODE_CACHE,
-        dedup._S16_PAIRS_CACHE,
-    ):
-        cache["sentinel"] = "x"
-        memo.register_cache(cache)
+
+def _write_table(spark, tmp_path, sf_dir: str, table: str, df) -> None:
+    """Rewrite ``<sf_dir>/<table>.parquet`` in place as one flat file."""
+    out = str(tmp_path / f"out_{table}")
+    df.coalesce(1).write.mode("overwrite").parquet(out)
+    shutil.copy(glob.glob(f"{out}/part-*.parquet")[0], f"{sf_dir}/{table}.parquet")
+
+
+def test_fixture_follows_an_in_place_rewrite(spark, tmp_path):
+    """A source fixture is keyed on its table's fingerprint: documents
+    rewritten in place get a new replay source, the superseded
+    directory is removed, and reset_memos leaves fixtures alone (VERDICT
+    r14 item 7)."""
+    from wikistream_event_data_pipeline_aws_spark.plans import text
+
+    sf_dir = str(tmp_path / "sf")
+    os.makedirs(sf_dir)
+    docs = "id AS doc_id", "concat('w', CAST(id AS STRING)) AS text"
+    _write_table(spark, tmp_path, sf_dir, "documents", spark.range(4).selectExpr(*docs))
+    src1 = text._postings_stream_src(spark, sf_dir)
     memo.reset_memos()
-    assert not bpe._PIPELINE_CACHE and not dedup._S16_PAIRS_CACHE
-    assert not bpe._WORDGRAIN_CACHE and not bpe._ENCODE_CACHE
+    assert text._postings_stream_src(spark, sf_dir) == src1
+    _write_table(spark, tmp_path, sf_dir, "documents", spark.range(6).selectExpr(*docs))
+    src2 = text._postings_stream_src(spark, sf_dir)
+    assert src2 != src1 and not os.path.exists(os.path.dirname(src1))
+    assert spark.read.parquet(src2).count() == 6
+
+
+def test_sse_capture_follows_an_in_place_rewrite(spark, tmp_path, monkeypatch):
+    """The content-addressed SSE capture is looked up per call: events
+    rewritten in place get a new capture, not the old one."""
+    from wikistream_event_data_pipeline_aws_spark.plans import pyapi, snapshots
+
+    monkeypatch.setattr(snapshots, "_WAREHOUSE", str(tmp_path / "warehouse"))
+    sf_dir = str(tmp_path / "sf")
+    os.makedirs(sf_dir)
+
+    def events(n: int):
+        return spark.range(n).selectExpr(
+            "id AS event_id",
+            "timestamp_micros(id) AS ts",
+            "'click' AS event_type",
+            "CAST(id AS DOUBLE) AS value",
+        )
+
+    _write_table(spark, tmp_path, sf_dir, "events", events(3))
+    cap1 = pyapi._sse_capture(spark, sf_dir)
+    _write_table(spark, tmp_path, sf_dir, "events", events(5))
+    cap2 = pyapi._sse_capture(spark, sf_dir)
+    assert cap2 != cap1
+    with open(cap2, encoding="utf-8") as f:
+        assert len(f.readlines()) == 5
 
 
 def test_fused_seed_serves_both_simhash_kernels(spark):

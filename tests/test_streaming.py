@@ -1202,3 +1202,25 @@ def test_interval_join_tight_watermark_evicts_late_purchase(spark, tmp_path, bat
     }
     assert (1, 50) in pairs and (2, 60) in pairs, pairs
     assert (1, 70) not in pairs, pairs  # late purchase evicted, not joined
+
+
+def test_streaming_sink_queries_remove_their_scratch_dirs(spark, sf_dir, tmp_path, monkeypatch):
+    """Each streaming-sink query materializes its small readout and
+    removes its per-call ``*_stream_`` scratch directory (sink state,
+    streaming checkpoint) before returning."""
+    import tempfile
+
+    from wikistream_event_data_pipeline_aws_spark import registry
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    qs = registry.queries()
+    for name in (
+        "streaming_postings_sink",
+        "streaming_entropy_sink",
+        "streaming_ann_index_sink",
+        "streaming_hll_users",
+        "streaming_histogram_quantiles",
+        "scd2_stream_replay",
+    ):
+        assert qs[name](spark, sf_dir).count() > 0, name
+        assert not list(tmp_path.glob("*_stream_*")), name

@@ -1,74 +1,79 @@
-"""Session-scoped DataFrame memos (r13 optimization, guide §1.2 "don't
-compute things twice").
+"""One store for everything the engine builds once and then reuses.
 
-Several analysis queries consume the SAME expensive kernel (the exact
-kNN scoring join, the multi-table LSH top-k, the minhash pair set, the
-BPE pipeline); without sharing, each query re-runs the kernel from the
-parquet scan inside one session. The memo here is the discipline
-`plans/bpe.py` established and VERDICT r12 endorsed:
+Several analysis queries consume the same expensive kernel (the minhash
+pair set, the simhash band joins, the BPE pipeline, the graph edge
+list, the kNN and LSH top-k); without sharing, each re-runs it from the
+parquet scan. The streaming replays read source files that are a pure
+function of one input table. Both kinds are built once and served from
+one store, under one key format::
 
-- keyed by ``(applicationId, sf_dir-ish key, file fingerprint, the
-  algorithm constants baked into the cached plan)`` — the applicationId
-  dies with the SparkContext, so NOTHING persists across sessions and
-  every bench/oracle invocation (a fresh process) still computes from
-  the parquet inputs; the constants (TOP_K, N_PLANES, ...) make a
-  same-session constant change a cache MISS, not a stale answer
-  (ADVICE r13);
-- a file-identity fingerprint (path, size, mtime_ns per data file)
-  invalidates the entry if an sf_dir is rewritten in place — and the
-  stale entry is EVICTED on insert (same sf_dir, different fingerprint)
-  so a long-lived session over rewritten inputs doesn't accumulate dead
-  checkpointed blocks (ADVICE r13);
-- insertion evicts entries from other applications, so dead contexts
-  cannot pin checkpointed RDD blocks;
-- values are lazily ``localCheckpoint``-ed DataFrames: the first
-  consumer materializes, the rest reuse the checkpointed blocks.
+    (label, app_id, sf_dir, fingerprint of each table read, *consts)
 
-Measurement transparency (VERDICT r13 item 3): every hit/build is
-appended to :data:`MEMO_EVENTS` so ``bench.py`` can mark which timed
-queries were served by an already-built kernel (their per-query seconds
-are NOT standalone costs) and ``tools/spot_measure.py`` can clear the
-caches between repeats (:func:`reset_memos`) to measure standalone
-floors.
+- ``label`` names the entry: its namespace and its telemetry name.
+- ``app_id`` is the SparkContext's application id. A session memo dies
+  with its context, so nothing memoized survives a session and every
+  bench or oracle process computes from its parquet inputs. Fixtures
+  (:func:`fixture`) carry ``None`` here: they are files on disk and
+  outlive the session that wrote them.
+- The fingerprint (path, size, mtime_ns per data file) turns an input
+  rewritten in place into a miss, not a stale answer.
+- ``consts`` are the algorithm constants the built plan bakes in
+  (TOP_K, N_PLANES, ...): a changed constant is a miss, and siblings
+  that differ only in a constant coexist.
+
+Inserting an entry evicts what can never hit again: session memos of
+other applications (a dead context must not pin checkpointed blocks)
+and same-label, same-sf_dir entries whose fingerprint differs (their
+input was rewritten). A superseded fixture's directory is removed with
+its entry, and every fixture directory is removed at interpreter exit.
+
+The store keeps whatever ``build()`` returns; builds fence their own
+results, because only the kernel knows its shape (typically a lazy
+``localCheckpoint``; the simhash16 kernel keeps an eager signature
+beside lazy pairs). A contract check on a memoized kernel (simhash16's
+fail-fast envelope) runs in the caller, after the memo, on every call.
+
+Every session-memo hit or build is appended to :data:`MEMO_EVENTS`, so
+``bench.py`` can mark the timed queries served by an already-built
+kernel (their seconds are not standalone costs), and
+:func:`reset_memos` drops every session memo so a repeat measures its
+kernel standalone. A reset leaves the fixtures alone: they are setup
+artifacts that ``bench.warmup`` builds before timing, and clearing them
+would move their writes into timed runs.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
-from typing import Callable
+import shutil
+import tempfile
+from typing import Callable, TypeVar
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
-# (kind, label) audit trail: kind is "hit" | "build". Appended by
-# session_memo and by the hand-rolled memos in plans/bpe.py and
-# plans/dedup.py; consumed (and sliced by index) by bench._timed.
+T = TypeVar("T")
+
+# (kind, label) audit trail: kind is "hit" | "build". Consumed (and
+# sliced by index) by bench._timed and tools/spot_measure.py.
 MEMO_EVENTS: list[tuple[str, str]] = []
 
-# every memo dict that has passed through session_memo or was
-# explicitly registered — reset_memos() clears them all
-_ALL_CACHES: list[dict] = []
+# (label, app_id, sf_dir, fingerprints, *consts) -> built value; a
+# fixture entry has app_id None and holds (directory, built value)
+_STORE: dict[tuple, object] = {}
 
 
 def log_memo_event(kind: str, label: str) -> None:
     MEMO_EVENTS.append((kind, label))
 
 
-def register_cache(cache: dict) -> dict:
-    """Track ``cache`` so :func:`reset_memos` can clear it. Idempotent;
-    returns the dict for inline use at definition sites."""
-    if not any(c is cache for c in _ALL_CACHES):
-        _ALL_CACHES.append(cache)
-    return cache
-
-
 def reset_memos() -> None:
-    """Drop every registered memo entry (tools/spot_measure.py: forces
-    each repeat of a memoized query to rebuild its kernel, so the
-    recorded minimum is a standalone floor, not a memo-hit time). The
+    """Drop every session memo (tools/spot_measure.py, bench retries:
+    the next call of a memoized query rebuilds its kernel). The
     checkpointed blocks are reclaimed by Spark's ContextCleaner once
     the dropped DataFrames are garbage-collected."""
-    for cache in _ALL_CACHES:
-        cache.clear()
+    for k in [k for k in _STORE if k[1] is not None]:
+        del _STORE[k]
 
 
 def file_fingerprint(sf_dir: str, table: str) -> tuple:
@@ -92,38 +97,75 @@ def file_fingerprint(sf_dir: str, table: str) -> tuple:
         return (root,)
 
 
-def session_memo(
-    cache: dict,
-    spark: SparkSession,
-    key: tuple,
-    build: Callable[[], DataFrame],
-    label: str | None = None,
-) -> DataFrame:
-    """Return the memoized lazily-checkpointed DataFrame for ``key``
-    within the CURRENT Spark application, building it once per session.
-    ``key`` must already include the data fingerprint(s) of every table
-    the kernel reads (see :func:`file_fingerprint`) and the algorithm
-    constants the built plan bakes in (ADVICE r13 — a changed constant
-    must be a cache miss)."""
-    register_cache(cache)
-    name = label or getattr(build, "__qualname__", "memo")
-    app_id = spark.sparkContext.applicationId
-    full = (app_id, *key)
-    cached = cache.get(full)
-    if cached is not None:
-        log_memo_event("hit", name)
-        return cached
-    # evict: entries from dead applications, and same-app entries whose
-    # first key component (the sf_dir-ish key) matches but whose
-    # fingerprint/constants do not — a rewritten sf_dir must not leave
-    # stale checkpointed blocks pinned for the rest of the session
-    for k in [
+def _key(label: str, app_id: str | None, sf_dir: str, tables: tuple, consts: tuple) -> tuple:
+    fps = tuple(file_fingerprint(sf_dir, t) for t in tables)
+    return (label, app_id, sf_dir, fps, *consts)
+
+
+def _evict(key: tuple) -> list:
+    """Remove and return the entries that inserting ``key`` supersedes."""
+    label, app_id, sf_dir, fps = key[:4]
+    stale = [
         k
-        for k in cache
-        if k[0] != app_id or (len(k) > 1 and len(full) > 1 and k[1] == full[1])
-    ]:
-        del cache[k]
-    df = build().localCheckpoint(eager=False)
-    log_memo_event("build", name)
-    cache[full] = df
-    return df
+        for k in _STORE
+        if (app_id is not None and k[1] is not None and k[1] != app_id)
+        or (k[:3] == (label, app_id, sf_dir) and k[3] != fps)
+    ]
+    return [_STORE.pop(k) for k in stale]
+
+
+def session_memo(
+    spark: SparkSession,
+    label: str,
+    sf_dir: str,
+    tables: tuple,
+    consts: tuple,
+    build: Callable[[], T],
+) -> T:
+    """Return what ``build()`` returned for this key in the current
+    Spark application, building it once per session. ``tables`` names
+    every table the kernel reads under ``sf_dir``; ``consts`` holds the
+    algorithm constants its plan bakes in."""
+    key = _key(label, spark.sparkContext.applicationId, sf_dir, tables, consts)
+    if key in _STORE:
+        log_memo_event("hit", label)
+        return _STORE[key]
+    _evict(key)
+    # logged before the build, so a kernel built from other memoized
+    # kernels lists its own build first
+    log_memo_event("build", label)
+    value = _STORE[key] = build()
+    return value
+
+
+def is_memoized(
+    spark: SparkSession, label: str, sf_dir: str, tables: tuple, consts: tuple
+) -> bool:
+    """Whether :func:`session_memo` would hit for this key; logs nothing."""
+    return _key(label, spark.sparkContext.applicationId, sf_dir, tables, consts) in _STORE
+
+
+def fixture(label: str, sf_dir: str, tables: tuple, build: Callable[[str], T]) -> T:
+    """Return what ``build(directory)`` returned for the current files
+    of ``tables`` under ``sf_dir``, calling it once per file version
+    with a fresh temp directory to write into."""
+    key = _key(label, None, sf_dir, tables, ())
+    if key in _STORE:
+        return _STORE[key][1]
+    for path, _ in _evict(key):
+        shutil.rmtree(path, ignore_errors=True)
+    path = tempfile.mkdtemp(prefix=f"{label}_")
+    try:
+        value = build(path)
+    except BaseException:
+        shutil.rmtree(path, ignore_errors=True)
+        raise
+    _STORE[key] = (path, value)
+    return value
+
+
+@atexit.register
+def _remove_fixture_dirs() -> None:
+    for k, v in list(_STORE.items()):
+        if k[1] is None:
+            shutil.rmtree(v[0], ignore_errors=True)

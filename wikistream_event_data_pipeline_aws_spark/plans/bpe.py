@@ -49,8 +49,6 @@ reference's deepest text op is the regexp/URL-decode chain in
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -180,46 +178,6 @@ def _bpe_round(
     return next_seq, record
 
 
-# (applicationId, sf_dir, data_fingerprint) -> (records, seqs, vocab):
-# the merges query and the fertility readout share one pipeline;
-# memoizing the lazily checkpointed DataFrames means whichever query
-# runs first materializes the 8 rounds ONCE and the other reuses the
-# checkpointed RDDs — the per-round stages are fixed-overhead-bound at
-# bench SFs (32 checkpoint materializations), so running them twice
-# doubled pure scheduling cost (observed 15.3s + 19.7s in a degraded
-# window). Keyed by applicationId so a new SparkSession (whose
-# checkpointed RDDs died with the old context) can never see stale
-# entries, and by a cheap file-identity fingerprint (path, size,
-# mtime_ns of every data file under documents.parquet) so an sf_dir
-# rewritten IN PLACE invalidates the memo instead of serving stale
-# checkpoints (ADVICE r12). Insertion evicts every entry from a
-# different application — dead contexts can't pin RDD blocks forever.
-_PIPELINE_CACHE: dict[
-    tuple, tuple[list[DataFrame], list[DataFrame], DataFrame]
-] = {}
-
-
-def _data_fingerprint(sf_dir: str) -> tuple:
-    """(path, size, mtime_ns) per data file the pipeline reads —
-    documents.parquet as a single file or a directory of parts."""
-    root = os.path.join(sf_dir, "documents.parquet")
-    try:
-        if os.path.isdir(root):
-            out = []
-            for dirpath, _, names in sorted(os.walk(root)):
-                for n in sorted(names):
-                    p = os.path.join(dirpath, n)
-                    st = os.stat(p)
-                    out.append((p, st.st_size, st.st_mtime_ns))
-            return tuple(out)
-        st = os.stat(root)
-        return ((root, st.st_size, st.st_mtime_ns),)
-    except OSError:
-        # non-local path (s3a:// etc.) — fall back to path-only keying;
-        # the immutable-input contract is then the caller's to uphold
-        return (root,)
-
-
 # deterministic md5-uniform doc split for held-out encode evaluation:
 # hash(doc_id) mod 5 == 0 is HELD OUT (~20%), the rest is TRAIN —
 # reproducible on any engine, stable under reruns (same idiom as
@@ -238,9 +196,9 @@ def _split_hash() -> F.Column:
     return hex_hash(F.col("doc_id").cast("string"), seed=_SPLIT_SEED) % _SPLIT_MOD
 
 
-# (applicationId, sf_dir, fingerprint) -> fenced (is_heldout, source,
-# word, cnt) grain. r13 optimization (guide §2.3 "aggregate before you
-# shuffle" + §1.2 "don't compute things twice"): the BPE/unigram family
+# The session's fenced (is_heldout, source, word, cnt) grain of the
+# corpus (operators/memo.py). r13 optimization (guide §2.3 "aggregate
+# before you shuffle" + §1.2 "don't compute things twice"): the BPE/unigram family
 # used to tokenize and explode the FULL corpus five times — full-corpus
 # vocab, train-split vocab, per-(source, word) counts for the fertility
 # readout, held-out (source, word) counts, and the unigram readout's
@@ -249,41 +207,29 @@ def _split_hash() -> F.Column:
 # tokenize+explode+agg now runs ONCE per session per sf_dir and each
 # consumer derives its grain with a vocabulary-scale agg. At 100 TB the
 # corpus pass IS the dominant cost of the family; this takes it from
-# five passes to one. Same memo discipline as _PIPELINE_CACHE (app-id
-# eviction + file-identity fingerprint).
-_WORDGRAIN_CACHE: dict[tuple, DataFrame] = {}
-
-
+# five passes to one.
 def _word_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.memo import log_memo_event, register_cache
+    from ..operators.memo import session_memo
 
-    register_cache(_WORDGRAIN_CACHE)
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, _data_fingerprint(sf_dir))
-    cached = _WORDGRAIN_CACHE.get(key)
-    log_memo_event("hit" if cached is not None else "build", "bpe_word_grain")
-    if cached is not None:
-        return cached
-    for k in [k for k in _WORDGRAIN_CACHE if k[0] != app_id]:
-        del _WORDGRAIN_CACHE[k]
-    docs = load_table(spark, sf_dir, "documents")
-    # micro-corpus fixtures (tests) may lack `source`; vocab-grain
-    # consumers never read it, and per-source readouts only run against
-    # the real documents table, which carries it
-    src = F.col("source") if "source" in docs.columns else F.lit(None).cast("string")
-    g = (
-        docs.select(
-            (_split_hash() == 0).alias("is_heldout"),
-            src.alias("source"),
-            F.explode(tokenize(F.col("text"))).alias("word"),
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents")
+        # micro-corpus fixtures (tests) may lack `source`; vocab-grain
+        # consumers never read it, and per-source readouts only run against
+        # the real documents table, which carries it
+        src = F.col("source") if "source" in docs.columns else F.lit(None).cast("string")
+        return (
+            docs.select(
+                (_split_hash() == 0).alias("is_heldout"),
+                src.alias("source"),
+                F.explode(tokenize(F.col("text"))).alias("word"),
+            )
+            .filter(F.length("word") >= 1)
+            .groupBy("is_heldout", "source", "word")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .localCheckpoint(eager=False)
         )
-        .filter(F.length("word") >= 1)
-        .groupBy("is_heldout", "source", "word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
-    )
-    _WORDGRAIN_CACHE[key] = g
-    return g
+
+    return session_memo(spark, "bpe_word_grain", sf_dir, ("documents",), (), build)
 
 
 def _bpe_pipeline(
@@ -297,38 +243,40 @@ def _bpe_pipeline(
     the three queries cannot drift. Empty words are
     excluded on both engines up front: Spark's ``sequence(1, 0)``
     counts DOWN while DuckDB's ``range(1, 1)`` is empty, so a
-    zero-length token would diverge — and carries no pairs anyway."""
-    from ..operators.memo import log_memo_event, register_cache
+    zero-length token would diverge — and carries no pairs anyway.
 
-    register_cache(_PIPELINE_CACHE)
-    app_id = spark.sparkContext.applicationId
+    Memoized per session (operators/memo.py): the merges query and the
+    fertility readout share one pipeline, so whichever runs first
+    materializes the K rounds ONCE and the other reuses the checkpointed
+    RDDs — the per-round stages are fixed-overhead-bound at bench SFs,
+    so running them twice doubled pure scheduling cost (observed 15.3s +
+    19.7s in a degraded window)."""
+    from ..operators.memo import session_memo
+
+    def build() -> tuple[list[DataFrame], list[DataFrame], DataFrame]:
+        g = _word_grain(spark, sf_dir)
+        if split == "train":
+            g = g.filter(~F.col("is_heldout"))
+        vocab = (
+            g.groupBy("word")
+            .agg(F.sum("cnt").alias("freq"))
+            .localCheckpoint(eager=False)
+        )
+        seq = vocab.select(
+            "word", "freq", F.expr(_SYMS0_SQL).alias("syms")
+        ).localCheckpoint(eager=False)
+        records: list[DataFrame] = []
+        seqs: list[DataFrame] = [seq]
+        for k in range(1, BPE_MERGES + 1):
+            seq, rec = _bpe_round(seq, k)
+            records.append(rec)
+            seqs.append(seq)
+        return records, seqs, vocab
+
     # BPE_MERGES is baked into every cached round plan (ADVICE r13)
-    key = (app_id, sf_dir, split, _data_fingerprint(sf_dir), BPE_MERGES)
-    cached = _PIPELINE_CACHE.get(key)
-    log_memo_event("hit" if cached is not None else "build", "bpe_pipeline")
-    if cached is not None:
-        return cached
-    for k in [k for k in _PIPELINE_CACHE if k[0] != app_id]:
-        del _PIPELINE_CACHE[k]
-    g = _word_grain(spark, sf_dir)
-    if split == "train":
-        g = g.filter(~F.col("is_heldout"))
-    vocab = (
-        g.groupBy("word")
-        .agg(F.sum("cnt").alias("freq"))
-        .localCheckpoint(eager=False)
+    return session_memo(
+        spark, "bpe_pipeline", sf_dir, ("documents",), (split, BPE_MERGES), build
     )
-    seq = vocab.select(
-        "word", "freq", F.expr(_SYMS0_SQL).alias("syms")
-    ).localCheckpoint(eager=False)
-    records: list[DataFrame] = []
-    seqs: list[DataFrame] = [seq]
-    for k in range(1, BPE_MERGES + 1):
-        seq, rec = _bpe_round(seq, k)
-        records.append(rec)
-        seqs.append(seq)
-    _PIPELINE_CACHE[key] = (records, seqs, vocab)
-    return records, seqs, vocab
 
 
 def bpe_vocabulary_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -448,13 +396,6 @@ def bpe_vocabulary_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir, fingerprint) -> (wordsrc, eseqs, train_vocab):
-# the held-out ENCODE pipeline shared by the fertility readout and the
-# held-out curve — same memo discipline as _PIPELINE_CACHE (the train
-# pipeline), same eviction, same fingerprint invalidation.
-_ENCODE_CACHE: dict[tuple, tuple[DataFrame, DataFrame, DataFrame]] = {}
-
-
 def _fold_states_sql(k_rounds: int = BPE_MERGES) -> str:
     """Catalyst expression computing ALL K+1 encode states of one word
     as array<array<string>> — state 0 is the char decomposition (+EOW),
@@ -512,18 +453,24 @@ def _encode_pipeline(
     :func:`_fold_states_sql`) instead of K sequential window rounds —
     the merge table is a <=K-row broadcast folded over each held-out
     word locally, so the held-out vocabulary is shuffled ZERO times
-    between the train pipeline's output and the readout aggregations."""
-    from ..operators.memo import log_memo_event, register_cache
+    between the train pipeline's output and the readout aggregations.
+    Memoized per session: the fertility readout and the held-out curve
+    share it."""
+    from ..operators.memo import session_memo
 
-    register_cache(_ENCODE_CACHE)
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, _data_fingerprint(sf_dir), BPE_MERGES)
-    cached = _ENCODE_CACHE.get(key)
-    log_memo_event("hit" if cached is not None else "build", "bpe_encode_states")
-    if cached is not None:
-        return cached
-    for k in [k for k in _ENCODE_CACHE if k[0] != app_id]:
-        del _ENCODE_CACHE[k]
+    return session_memo(
+        spark,
+        "bpe_encode_states",
+        sf_dir,
+        ("documents",),
+        (BPE_MERGES,),
+        lambda: _encode_states(spark, sf_dir),
+    )
+
+
+def _encode_states(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     records, _, train_vocab = _bpe_pipeline(spark, sf_dir, split="train")
     merges = records[0]
     for rec in records[1:]:
@@ -553,7 +500,6 @@ def _encode_pipeline(
         )
         .localCheckpoint(eager=False)
     )
-    _ENCODE_CACHE[key] = (wordsrc, stepped, train_vocab)
     return wordsrc, stepped, train_vocab
 
 

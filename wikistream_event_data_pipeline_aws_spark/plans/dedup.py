@@ -176,12 +176,8 @@ def _minhash_pairs_from_docs(d: DataFrame) -> DataFrame:
 # reuse the checkpointed blocks. Nothing is persisted across sessions
 # (the app-id key dies with the SparkContext) and results are
 # bit-identical: the memo wraps the unchanged pair algebra.
-_MINHASH_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _minhash_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.memo import session_memo
-    from .bpe import _data_fingerprint  # same file-identity contract
 
     # N_HASHES is in the key (ADVICE r13): the cached plan bakes it in,
     # so a same-session constant change must be a cache miss
@@ -190,11 +186,14 @@ def _minhash_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     # straight off the scan and is not the cost at bench SF (2.29s
     # no-spread vs 2.57s spread warm); the extra exchange buys nothing.
     return session_memo(
-        _MINHASH_PAIRS_CACHE,
         spark,
-        (sf_dir, _data_fingerprint(sf_dir), N_HASHES),
-        lambda: _minhash_pairs_from_docs(_docs_augmented(spark, sf_dir)),
-        label="minhash_pairs",
+        "minhash_pairs",
+        sf_dir,
+        ("documents",),
+        (N_HASHES,),
+        lambda: _minhash_pairs_from_docs(_docs_augmented(spark, sf_dir)).localCheckpoint(
+            eager=False
+        ),
     )
 
 
@@ -773,39 +772,39 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # session-shared 16-bit pair set (r13, guide §1.2): consumed by
 # dedup_simhash_pairs (it IS the query) and dedup_sim16_agreement's
-# sim16 leg. Hand-rolled (not operators/memo.session_memo) because the
-# fail-fast envelope is PART OF THE QUERY CONTRACT: the check must run
-# on EVERY call — against the memoized signature count, a cheap job
-# over checkpointed blocks — never be cached away with the result
-# (the invariants suite monkeypatches the envelope and expects a raise
-# even when the pair set is already memoized).
-_S16_PAIRS_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
+# sim16 leg. The memo holds (signature, pairs): the fail-fast envelope
+# is PART OF THE QUERY CONTRACT, so it runs on EVERY call against the
+# memoized signature count — a cheap job over checkpointed blocks —
+# never cached away with the result (the invariants suite monkeypatches
+# the envelope and expects a raise even when the pair set is memoized).
+def _s16_key(sf_dir: str) -> tuple:
+    # SIMHASH_HAM_MAX is baked into the cached pair plan (ADVICE r13)
+    return ("simhash16_pairs", sf_dir, ("documents",), (SIMHASH_HAM_MAX,))
+
+
+def _s16_entry(sig: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The memoized value over an eagerly fenced (doc_id, simhash)
+    signature: (signature, lazily fenced pairs)."""
+    return sig, _simhash16_pairs_from_sig(sig).localCheckpoint(eager=False)
 
 
 def _simhash16_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.memo import file_fingerprint, log_memo_event, register_cache
+    from ..operators.memo import session_memo
 
-    register_cache(_S16_PAIRS_CACHE)
-    app_id = spark.sparkContext.applicationId
-    # SIMHASH_HAM_MAX is baked into the cached pair plan (ADVICE r13)
-    key = (app_id, sf_dir, file_fingerprint(sf_dir, "documents"), SIMHASH_HAM_MAX)
-    hit = _S16_PAIRS_CACHE.get(key)
-    log_memo_event("hit" if hit is not None else "build", "simhash16_pairs")
-    if hit is None:
-        for k in [k for k in _S16_PAIRS_CACHE if k[0] != app_id]:
-            del _S16_PAIRS_CACHE[k]
-        # spread BEFORE the signature projection: the parquet scan yields
-        # 1-2 splits at test SFs and repartitioning the OUTPUT leaves the
-        # expensive per-row bit votes serialized on those splits (measured
-        # ~4s of the fused build at sf0.1); shuffling the slim (id, text)
-        # rows first runs the votes on every core, and at 100 TB the scan
-        # already has thousands of splits so this stays a near-no-op
-        d = _spread(_docs_augmented(spark, sf_dir))
-        sig = simhash16(d, "doc_id", "text").localCheckpoint(eager=True)
-        pairs = _simhash16_pairs_from_sig(sig).localCheckpoint(eager=False)
-        hit = (sig, pairs)
-        _S16_PAIRS_CACHE[key] = hit
-    sig, pairs = hit
+    # spread BEFORE the signature projection: the parquet scan yields
+    # 1-2 splits at test SFs and repartitioning the OUTPUT leaves the
+    # expensive per-row bit votes serialized on those splits (measured
+    # ~4s of the fused build at sf0.1); shuffling the slim (id, text)
+    # rows first runs the votes on every core, and at 100 TB the scan
+    # already has thousands of splits so this stays a near-no-op
+    sig, pairs = session_memo(
+        spark,
+        *_s16_key(sf_dir),
+        lambda: _s16_entry(
+            simhash16(_spread(_docs_augmented(spark, sf_dir)), "doc_id", "text")
+            .localCheckpoint(eager=True)
+        ),
+    )
     # envelope guard on the already-materialized signature rows (one per
     # non-NULL-text doc, ADVICE r7): the signature build is map-only
     # O(N) and safe at any scale — the guard protects the band join
@@ -880,26 +879,20 @@ def dedup_simhash_band60(spark: SparkSession, sf_dir: str) -> DataFrame:
 # query), dedup_method_agreement's sim60 leg, and
 # dedup_sim16_agreement's sim60 leg (whose fused signature is
 # documented bit-for-bit identical to simhash60 — operators/textops
-# simhash_fused) — memoized via operators/memo.py (app-id keyed,
-# file-fingerprint invalidated, nothing survives the session)
-_S60_PAIRS_CACHE: dict[tuple, DataFrame] = {}
+# simhash_fused) — memoized once per session (operators/memo.py)
+def _s60_key(sf_dir: str) -> tuple:
+    return ("simhash60_pairs", sf_dir, ("documents",), (SIMHASH60_BANDS, SIMHASH60_HAM_MAX))
 
 
 def _simhash60_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.memo import file_fingerprint, session_memo
+    from ..operators.memo import session_memo
 
     def build() -> DataFrame:
         d = _spread(_docs_augmented(spark, sf_dir))  # spread before the votes
         sig = simhash60(d, "doc_id", "text").localCheckpoint(eager=True)
-        return _simhash60_pairs_from_sig(sig)
+        return _simhash60_pairs_from_sig(sig).localCheckpoint(eager=False)
 
-    return session_memo(
-        _S60_PAIRS_CACHE,
-        spark,
-        (sf_dir, file_fingerprint(sf_dir, "documents"), SIMHASH60_BANDS, SIMHASH60_HAM_MAX),
-        build,
-        label="simhash60_pairs",
-    )
+    return session_memo(spark, *_s60_key(sf_dir), build)
 
 
 def _simhash60_pairs_from_sig(sig: DataFrame) -> DataFrame:
@@ -1159,38 +1152,39 @@ def _seed_simhash_caches_fused(spark: SparkSession, sf_dir: str) -> None:
     signatures from ONE fused corpus pass
     (``operators/textops.simhash_fused`` — pinned bit-for-bit identical
     to the single-width builds by the invariants suite) and seed both
-    caches in the exact format their owners store. No-op whenever
-    either cache is already warm. In the bench battery's sorted order
+    caches through their owners' memos. No-op whenever either cache
+    is already warm. In the bench battery's sorted order
     that is always so because ``dedup_method_agreement`` runs before
     ``dedup_sim16_agreement`` and warms the s60 cache (the owner queries
     ``dedup_simhash_band60``/``dedup_simhash_pairs`` sort after it, so
     they are not the reason). In-battery behavior is therefore
     unchanged; the s16 fail-fast envelope still runs per call in
     ``_simhash16_pairs_shared`` against the seeded signature count."""
-    from ..operators.memo import file_fingerprint, log_memo_event, register_cache
+    from ..operators.memo import is_memoized, session_memo
     from ..operators.textops import simhash_fused
 
-    app_id = spark.sparkContext.applicationId
-    fp = file_fingerprint(sf_dir, "documents")
-    k16 = (app_id, sf_dir, fp, SIMHASH_HAM_MAX)
-    k60 = (app_id, sf_dir, fp, SIMHASH60_BANDS, SIMHASH60_HAM_MAX)
-    if _S16_PAIRS_CACHE.get(k16) is not None or _S60_PAIRS_CACHE.get(k60) is not None:
+    if is_memoized(spark, *_s16_key(sf_dir)) or is_memoized(spark, *_s60_key(sf_dir)):
         return
-    register_cache(_S16_PAIRS_CACHE)
-    register_cache(_S60_PAIRS_CACHE)
-    fused = simhash_fused(
-        _spread(_docs_augmented(spark, sf_dir)), "doc_id", "text"
-    ).localCheckpoint(eager=True)
-    sig16 = fused.select("doc_id", "simhash")
-    sig60 = fused.select("doc_id", "simhash60")
-    _S16_PAIRS_CACHE[k16] = (
-        sig16,
-        _simhash16_pairs_from_sig(sig16).localCheckpoint(eager=False),
+    fused = session_memo(
+        spark,
+        "simhash_fused_seed",
+        sf_dir,
+        ("documents",),
+        (),
+        lambda: simhash_fused(
+            _spread(_docs_augmented(spark, sf_dir)), "doc_id", "text"
+        ).localCheckpoint(eager=True),
     )
-    _S60_PAIRS_CACHE[k60] = _simhash60_pairs_from_sig(sig60).localCheckpoint(
-        eager=False
+    session_memo(
+        spark, *_s16_key(sf_dir), lambda: _s16_entry(fused.select("doc_id", "simhash"))
     )
-    log_memo_event("build", "simhash_fused_seed")
+    session_memo(
+        spark,
+        *_s60_key(sf_dir),
+        lambda: _simhash60_pairs_from_sig(fused.select("doc_id", "simhash60")).localCheckpoint(
+            eager=False
+        ),
+    )
 
 
 def dedup_sim16_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -87,27 +87,25 @@ def _oriented_edges(edges: DataFrame) -> DataFrame:
 # queries rebuild the identical canonical edge list — lineitem window
 # scan -> distinct (order, part) -> order self-join -> distinct pair —
 # from parquet every time; at 100 TB that scan+self-join IS the graph
-# family's dominant shared cost. Memo discipline: operators/memo.py
-# (app-id keyed, file-fingerprint invalidated, nothing survives the
-# session). Same-window family A/B at sf0.1/32cpu: 17.9s -> 12.2s.
+# family's dominant shared cost. Memoized once per session
+# (operators/memo.py). Same-window family A/B at sf0.1/32cpu: 17.9s ->
+# 12.2s.
 # NOTE this is CROSS-QUERY sharing — the r13 negative result ("graph
 # fencing reverted") was about fencing per-iteration subtrees WITHIN
 # one query, where ReuseExchange already deduplicates identical
 # exchange-terminated subtrees for free; across separate actions there
 # is no ReuseExchange, so the memo is the only way to pay the build
 # once per session.
-_COOCCUR_EDGES_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _cooccurrence_edges_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.memo import file_fingerprint, session_memo
+    from ..operators.memo import session_memo
 
     return session_memo(
-        _COOCCUR_EDGES_CACHE,
         spark,
-        (sf_dir, file_fingerprint(sf_dir, "lineitem"), _WIN_LO, _WIN_HI),
-        lambda: _cooccurrence_edges(spark, sf_dir),
-        label="cooccurrence_edges",
+        "cooccurrence_edges",
+        sf_dir,
+        ("lineitem",),
+        (_WIN_LO, _WIN_HI),
+        lambda: _cooccurrence_edges(spark, sf_dir).localCheckpoint(eager=False),
     )
 
 

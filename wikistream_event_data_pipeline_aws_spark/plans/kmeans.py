@@ -305,20 +305,17 @@ _KNN_TEST_MOD = 20  # vec_id % MOD == 0 -> held-out test vector
 
 # session-shared exact-kNN prediction set (r13, guide §1.2): the
 # classifier query AND the confusion scorecard consume the identical
-# scoring join — memoized per (session, sf_dir) with the same app-id /
-# file-fingerprint discipline as plans/bpe.py (operators/memo.py)
-_KNN_PRED_CACHE: dict[tuple, DataFrame] = {}
-
-
+# scoring join — memoized once per session (operators/memo.py)
 def knn_classify_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.memo import file_fingerprint, session_memo
+    from ..operators.memo import session_memo
 
     return session_memo(
-        _KNN_PRED_CACHE,
         spark,
-        (sf_dir, file_fingerprint(sf_dir, "embeddings"), KNN_K, _KNN_TEST_MOD),
-        lambda: _knn_classify_embeddings(spark, sf_dir),
-        label="knn_predictions",
+        "knn_predictions",
+        sf_dir,
+        ("embeddings",),
+        (KNN_K, _KNN_TEST_MOD),
+        lambda: _knn_classify_embeddings(spark, sf_dir).localCheckpoint(eager=False),
     )
 
 

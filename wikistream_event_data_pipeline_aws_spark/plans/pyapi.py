@@ -109,9 +109,6 @@ WHERE event_type = 'purchase'
 """
 
 
-_SSE_FIXTURE_CACHE: dict[str, str] = {}
-
-
 def _sse_capture(spark: SparkSession, sf_dir: str) -> str:
     """Deterministic SSE capture fixture: the events table serialized
     as NDJSON in event_id order — what recording the reference's SSE
@@ -120,9 +117,6 @@ def _sse_capture(spark: SparkSession, sf_dir: str) -> str:
     atomic rename, the same marker discipline as the versioned-table
     fixtures), so repeated bench/driver processes pay the ~seconds
     serialization cost once, not per run (VERDICT r6 item 5)."""
-    path = _SSE_FIXTURE_CACHE.get(sf_dir)
-    if path is not None:
-        return path
     import hashlib
     import os
 
@@ -136,8 +130,9 @@ def _sse_capture(spark: SparkSession, sf_dir: str) -> str:
     # (source path + size + mtime — the testdata HAS changed shape
     # between driver rounds before) is part of the file NAME, so the
     # capture can never be observed paired with another source's stamp:
-    # existence IS validity, and two concurrent builders for different
-    # sources race on different names. Stale generations are left in
+    # existence IS validity (one stat + exists per call, so an in-place
+    # rewrite of events.parquet is seen at once), and two concurrent
+    # builders for different sources race on different names. Stale generations are left in
     # place (a concurrent reader may still hold one; the warehouse is
     # scratch space, ~MBs per generation).
     stamp = f"{src}:{st.st_size}:{int(st.st_mtime_ns)}"
@@ -145,7 +140,6 @@ def _sse_capture(spark: SparkSession, sf_dir: str) -> str:
         cap_dir, f"capture-{hashlib.md5(stamp.encode()).hexdigest()[:12]}.ndjson"
     )
     if os.path.exists(path):
-        _SSE_FIXTURE_CACHE[sf_dir] = path
         return path
     import pyarrow.parquet as pq
 
@@ -176,7 +170,6 @@ def _sse_capture(spark: SparkSession, sf_dir: str) -> str:
     with open(tmp, "w", encoding="utf-8") as f:
         f.writelines(lines)
     os.replace(tmp, path)  # atomic: a racing builder wrote identical bytes
-    _SSE_FIXTURE_CACHE[sf_dir] = path
     return path
 
 

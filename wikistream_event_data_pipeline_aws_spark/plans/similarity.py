@@ -98,26 +98,18 @@ def audit_sample_sql(expr: str, per_mille: int) -> str:
 # leg by FILTERING the shared kernel (query-subset / audit-sample /
 # rank prefix) — filters commute with the kernel, and the audit knobs
 # the invariants suite monkeypatches are applied per call, after the
-# memo. Memo discipline: operators/memo.py (app-id keyed,
-# file-fingerprint invalidated; nothing survives the session).
-_EXACT_TOPK_CACHE: dict[tuple, DataFrame] = {}
-
-
+# memo (operators/memo.py; nothing survives the session).
 def _exact_topk_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.memo import file_fingerprint, session_memo
+    from ..operators.memo import session_memo
 
     def build() -> DataFrame:
         e = load_table(spark, sf_dir, "embeddings")
         return brute_force_topk(
             e.filter(F.col("vec_id") < N_QUERIES), e, k=TOP_K
-        )
+        ).localCheckpoint(eager=False)
 
     return session_memo(
-        _EXACT_TOPK_CACHE,
-        spark,
-        (sf_dir, file_fingerprint(sf_dir, "embeddings"), TOP_K, N_QUERIES),
-        build,
-        label="exact_topk",
+        spark, "exact_topk", sf_dir, ("embeddings",), (TOP_K, N_QUERIES), build
     )
 
 
@@ -234,31 +226,29 @@ N_TABLES = 3
 
 # session-shared multi-table LSH top-k (r13, guide §1.2): three queries
 # consume this exact kernel — the query itself, similarity_ann_recall
-# and eval_ann_ranking — memoized with the app-id / file-fingerprint
-# discipline of operators/memo.py (nothing survives the session)
-_LSH_MULTI_CACHE: dict[tuple, DataFrame] = {}
-
+# and eval_ann_ranking — memoized once per session (operators/memo.py)
 
 def similarity_ann_lsh_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-table LSH ANN (union-of-tables candidate set, deduped):
     the recall lever over the single-table path, still deterministic —
     every table's hyperplanes are md5-derived, so the oracle reproduces
     the exact candidate set and the result is value-checked."""
-    from ..operators.memo import file_fingerprint, session_memo
+    from ..operators.memo import session_memo
 
     def build() -> DataFrame:
         e = load_table(spark, sf_dir, "embeddings")
         queries = e.filter(F.col("vec_id") < N_QUERIES)
         return lsh_multi_table_topk(
             queries, e, dim=DIM, k=TOP_K, n_planes=N_PLANES, n_tables=N_TABLES
-        )
+        ).localCheckpoint(eager=False)
 
     return session_memo(
-        _LSH_MULTI_CACHE,
         spark,
-        (sf_dir, file_fingerprint(sf_dir, "embeddings"), DIM, TOP_K, N_PLANES, N_TABLES, N_QUERIES),
+        "lsh_multi_topk",
+        sf_dir,
+        ("embeddings",),
+        (DIM, TOP_K, N_PLANES, N_TABLES, N_QUERIES),
         build,
-        label="lsh_multi_topk",
     )
 
 
@@ -1080,25 +1070,18 @@ FROM ranked WHERE neg_rank <= {HARDNEG_TOPK}
 MINE_HARD_NEGATIVES_SQL = _hardneg_oracle_sql()
 
 
-_ANN_SIG_SRC_CACHE: dict[str, str] = {}
-
-
 def _ann_sig_stream_src(spark: SparkSession, sf_dir: str) -> str:
-    """Two-file (even/odd vec_id) replay source, built once per
-    (session, sf_dir) — immutable input; bench.warmup pre-builds it
-    with the other setup artifacts."""
-    import tempfile
+    """Two-file (even/odd vec_id) replay source, built once per version
+    of the embeddings table; bench.warmup pre-builds it with the other
+    setup artifacts."""
+    from ..operators.memo import fixture
+    from ..streaming.ingest import write_parity_replay
 
-    src = _ANN_SIG_SRC_CACHE.get(sf_dir)
-    if src is None:
-        e = load_table(spark, sf_dir, "embeddings")
-        src = tempfile.mkdtemp(prefix="annsig_stream_src_") + "/src"
-        for parity in (0, 1):
-            e.filter(F.col("vec_id") % 2 == parity).select(
-                "vec_id", "embedding"
-            ).coalesce(1).write.mode("append").parquet(src)
-        _ANN_SIG_SRC_CACHE[sf_dir] = src
-    return src
+    def build(base: str) -> str:
+        e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        return write_parity_replay(e, "vec_id", base)
+
+    return fixture("annsig_src", sf_dir, ("embeddings",), build)
 
 
 def streaming_ann_index_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1122,60 +1105,61 @@ def streaming_ann_index_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings")
     src = _ann_sig_stream_src(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="annsig_stream_")
-    sig_path, ckpt = f"{tmp}/sigs", f"{tmp}/ckpt"
-    schema = spark.read.parquet(src).schema
-    stream = file_stream(spark, src, schema, max_files_per_trigger=1)
-    q = start_ann_signature_sink(
-        stream,
-        sig_path,
-        checkpoint_dir=ckpt,
-        dim=DIM,
-        n_planes=N_PLANES,
-        n_tables=N_TABLES,
-        trigger={"availableNow": True},
-    )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("ann signature stream did not finish in 300s")
-    sigs = spark.read.parquet(sig_path)
-    qs = sigs.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "table", "bucket"
-    )
-    cs = sigs.select(F.col("vec_id").alias("neighbor_id"), "table", "bucket")
-    cand = (
-        qs.join(cs, ["table", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    qv = e.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv"))
-    cv = e.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv")
-    )
-    scored = (
-        cand.join(F.broadcast(qv.filter(F.col("query_id") < N_QUERIES)), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine("__qv", "__cv").alias("cosine_sim"),
+    with tempfile.TemporaryDirectory(prefix="annsig_stream_", ignore_cleanup_errors=True) as tmp:
+        sig_path, ckpt = f"{tmp}/sigs", f"{tmp}/ckpt"
+        schema = spark.read.parquet(src).schema
+        stream = file_stream(spark, src, schema, max_files_per_trigger=1)
+        q = start_ann_signature_sink(
+            stream,
+            sig_path,
+            checkpoint_dir=ckpt,
+            dim=DIM,
+            n_planes=N_PLANES,
+            n_tables=N_TABLES,
+            trigger={"availableNow": True},
         )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            "cosine_sim",
+        q.awaitTermination(300)
+        if q.isActive:
+            q.stop()
+            raise TimeoutError("ann signature stream did not finish in 300s")
+        sigs = spark.read.parquet(sig_path)
+        qs = sigs.filter(F.col("vec_id") < N_QUERIES).select(
+            F.col("vec_id").alias("query_id"), "table", "bucket"
         )
-    )
+        cs = sigs.select(F.col("vec_id").alias("neighbor_id"), "table", "bucket")
+        cand = (
+            qs.join(cs, ["table", "bucket"])
+            .filter(F.col("query_id") != F.col("neighbor_id"))
+            .select("query_id", "neighbor_id")
+            .distinct()
+        )
+        qv = e.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv"))
+        cv = e.select(
+            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv")
+        )
+        scored = (
+            cand.join(F.broadcast(qv.filter(F.col("query_id") < N_QUERIES)), "query_id")
+            .join(cv, "neighbor_id")
+            .select(
+                "query_id",
+                "neighbor_id",
+                cosine("__qv", "__cv").alias("cosine_sim"),
+            )
+        )
+        w = Window.partitionBy("query_id").orderBy(
+            F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
+        )
+        return (
+            scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= TOP_K)
+            .select(
+                "query_id",
+                "neighbor_id",
+                F.col("rank").cast("long").alias("rank"),
+                "cosine_sim",
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 _Q_SCALE = 127.0

@@ -747,9 +747,6 @@ FROM ka, kb, bth, xa, xb, xab
 """
 
 
-_HLL_SRC_CACHE: dict[str, str] = {}
-
-
 def streaming_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sketch materialization end-to-end: the events table is
     replayed as TWO micro-batches (deterministic even/odd user split,
@@ -763,59 +760,57 @@ def streaming_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned separately in the invariant tests."""
     import tempfile
 
-    from ..streaming.ingest import file_stream, start_hll_sink
+    from ..operators.memo import fixture
+    from ..streaming.ingest import file_stream, start_hll_sink, write_parity_replay
 
-    tmp = tempfile.mkdtemp(prefix="hll_stream_")
-    regs_path, ckpt = f"{tmp}/regs", f"{tmp}/ckpt"
-    e = load_table(spark, sf_dir, "events").select("user_id")
-    # The SOURCE fixture (two files = two micro-batches) is immutable per
-    # scale factor — cache it across invocations; register/checkpoint
-    # state is per-run. Replay the DISTINCT user set: HLL registers are
-    # duplicate-insensitive (max of identical rho), so streaming the
-    # deduped keys is register-identical to streaming every event — and
-    # the fixture write drops from |events| to |users| rows.
-    src = _HLL_SRC_CACHE.get(sf_dir)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="hll_stream_src_") + "/src"
-        users = e.distinct()
-        for parity in (0, 1):
-            users.filter(F.col("user_id") % 2 == parity).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-        _HLL_SRC_CACHE[sf_dir] = src
-    stream = file_stream(spark, src, "user_id bigint", max_files_per_trigger=1)
-    q = start_hll_sink(
-        stream,
-        regs_path,
-        key_col="user_id",
-        seed="hlls",
-        checkpoint_dir=ckpt,
-        m=HLL_M,
-        trigger={"availableNow": True},
-    )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("hll stream did not finish in 300s")
+    with tempfile.TemporaryDirectory(prefix="hll_stream_", ignore_cleanup_errors=True) as tmp:
+        regs_path, ckpt = f"{tmp}/regs", f"{tmp}/ckpt"
+        e = load_table(spark, sf_dir, "events").select("user_id")
+        # The SOURCE fixture (two files = two micro-batches) is a function of
+        # the events table — built once per table version; register/checkpoint
+        # state is per-run. Replay the DISTINCT user set: HLL registers are
+        # duplicate-insensitive (max of identical rho), so streaming the
+        # deduped keys is register-identical to streaming every event — and
+        # the fixture write drops from |events| to |users| rows.
+        src = fixture(
+            "hll_src",
+            sf_dir,
+            ("events",),
+            lambda base: write_parity_replay(e.distinct(), "user_id", base),
+        )
+        stream = file_stream(spark, src, "user_id bigint", max_files_per_trigger=1)
+        q = start_hll_sink(
+            stream,
+            regs_path,
+            key_col="user_id",
+            seed="hlls",
+            checkpoint_dir=ckpt,
+            m=HLL_M,
+            trigger={"availableNow": True},
+        )
+        q.awaitTermination(300)
+        if q.isActive:
+            q.stop()
+            raise TimeoutError("hll stream did not finish in 300s")
 
-    regs = spark.read.parquet(regs_path)
-    a = regs.agg(
-        F.count(F.lit(1)).alias("n_obs"),
-        F.sum(F.expr("CAST(shiftleft(1L, 62 - M) AS DECIMAL(38,0))")).alias("s_obs"),
-    )
-    x = e.agg(F.countDistinct("user_id").alias("n_exact"))
-    s_total = F.expr(
-        f"s_obs + CAST({HLL_M}L - n_obs AS DECIMAL(38,0))"
-        f" * CAST({_POW62} AS DECIMAL(38,0))"
-    )
-    est = F.lit(float(_NUM)) / s_total.cast("double")
-    n_exact_d = F.col("n_exact").cast("double")
-    return a.crossJoin(x).select(
-        F.col("n_obs").alias("n_nonzero_registers"),
-        F.col("n_exact").alias("n_exact_distinct"),
-        est.alias("hll_estimate"),
-        ((est - n_exact_d) / n_exact_d).alias("rel_error"),
-    )
+        regs = spark.read.parquet(regs_path)
+        a = regs.agg(
+            F.count(F.lit(1)).alias("n_obs"),
+            F.sum(F.expr("CAST(shiftleft(1L, 62 - M) AS DECIMAL(38,0))")).alias("s_obs"),
+        )
+        x = e.agg(F.countDistinct("user_id").alias("n_exact"))
+        s_total = F.expr(
+            f"s_obs + CAST({HLL_M}L - n_obs AS DECIMAL(38,0))"
+            f" * CAST({_POW62} AS DECIMAL(38,0))"
+        )
+        est = F.lit(float(_NUM)) / s_total.cast("double")
+        n_exact_d = F.col("n_exact").cast("double")
+        return a.crossJoin(x).select(
+            F.col("n_obs").alias("n_nonzero_registers"),
+            F.col("n_exact").alias("n_exact_distinct"),
+            est.alias("hll_estimate"),
+            ((est - n_exact_d) / n_exact_d).alias("rel_error"),
+        ).localCheckpoint(eager=True)
 
 
 STREAMING_HLL_USERS_SQL = f"""
@@ -845,9 +840,6 @@ FROM a, x
 """
 
 
-_HIST_STREAM_SRC_CACHE: dict[str, str] = {}
-
-
 def streaming_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming quantile sketch end-to-end — the ADDITIVE-state twin
     of ``streaming_hll_users``: events replay as two micro-batches
@@ -866,66 +858,61 @@ def streaming_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
     n_batches x B rows, compactable by summing — never data-sized."""
     import tempfile
 
-    from ..streaming.ingest import file_stream, start_histogram_sink
+    from ..operators.memo import fixture
+    from ..streaming.ingest import file_stream, start_histogram_sink, write_parity_replay
 
     e = load_table(spark, sf_dir, "events").select("event_id", "value")
     mm = e.agg(F.min("value").alias("mn"), F.max("value").alias("mx")).first()
     mn, mx = float(mm["mn"]), float(mm["mx"])
 
-    src = _HIST_STREAM_SRC_CACHE.get(sf_dir)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="hist_stream_src_") + "/src"
-        for parity in (0, 1):
-            e.filter(F.col("event_id") % 2 == parity).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-        _HIST_STREAM_SRC_CACHE[sf_dir] = src
+    src = fixture(
+        "hist_src", sf_dir, ("events",), lambda base: write_parity_replay(e, "event_id", base)
+    )
+    with tempfile.TemporaryDirectory(prefix="hist_stream_", ignore_cleanup_errors=True) as tmp:
+        bins_path, ckpt = f"{tmp}/bins", f"{tmp}/ckpt"
+        stream = file_stream(
+            spark, src, "event_id bigint, value double", max_files_per_trigger=1
+        )
+        q = start_histogram_sink(
+            stream,
+            bins_path,
+            value_col="value",
+            mn=mn,
+            mx=mx,
+            checkpoint_dir=ckpt,
+            n_bins=HIST_BINS,
+            trigger={"availableNow": True},
+        )
+        q.awaitTermination(300)
+        if q.isActive:
+            q.stop()
+            raise TimeoutError("histogram stream did not finish in 300s")
 
-    tmp = tempfile.mkdtemp(prefix="hist_stream_")
-    bins_path, ckpt = f"{tmp}/bins", f"{tmp}/ckpt"
-    stream = file_stream(
-        spark, src, "event_id bigint, value double", max_files_per_trigger=1
-    )
-    q = start_histogram_sink(
-        stream,
-        bins_path,
-        value_col="value",
-        mn=mn,
-        mx=mx,
-        checkpoint_dir=ckpt,
-        n_bins=HIST_BINS,
-        trigger={"availableNow": True},
-    )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("histogram stream did not finish in 300s")
-
-    hist = (
-        spark.read.parquet(bins_path)
-        .groupBy("bin")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    n_total = hist.agg(F.sum("cnt").alias("n"))
-    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    cum = hist.select("bin", F.sum("cnt").over(w).alias("cum")).join(
-        F.broadcast(n_total)
-    )
-    qs = F.explode(F.array(*[F.lit(x) for x in HIST_QS])).alias("q")
-    targets = cum.select("bin", "cum", "n", qs).filter(
-        F.col("cum") >= F.ceil(F.col("q") * F.col("n"))
-    )
-    best = targets.groupBy("q").agg(
-        F.min("bin").alias("bin"), F.first("n").alias("n")
-    )
-    est = F.lit(mn) + (F.col("bin") + F.lit(0.5)) / HIST_BINS * F.lit(mx - mn)
-    return best.select(
-        "q",
-        F.ceil(F.col("q") * F.col("n")).alias("target_rank"),
-        "bin",
-        est.alias("est_value"),
-        F.col("n").alias("n_rows"),
-    )
+        hist = (
+            spark.read.parquet(bins_path)
+            .groupBy("bin")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
+        n_total = hist.agg(F.sum("cnt").alias("n"))
+        w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
+        cum = hist.select("bin", F.sum("cnt").over(w).alias("cum")).join(
+            F.broadcast(n_total)
+        )
+        qs = F.explode(F.array(*[F.lit(x) for x in HIST_QS])).alias("q")
+        targets = cum.select("bin", "cum", "n", qs).filter(
+            F.col("cum") >= F.ceil(F.col("q") * F.col("n"))
+        )
+        best = targets.groupBy("q").agg(
+            F.min("bin").alias("bin"), F.first("n").alias("n")
+        )
+        est = F.lit(mn) + (F.col("bin") + F.lit(0.5)) / HIST_BINS * F.lit(mx - mn)
+        return best.select(
+            "q",
+            F.ceil(F.col("q") * F.col("n")).alias("target_rank"),
+            "bin",
+            est.alias("est_value"),
+            F.col("n").alias("n_rows"),
+        ).localCheckpoint(eager=True)
 
 
 def histogram_quantiles_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.memo import file_fingerprint, register_cache
+from ..operators.memo import session_memo
 from ..session import ensure_session_confs
 from ..streaming.ingest import stateful_user_counts, watermark_dedup
 
@@ -41,23 +41,23 @@ _AWAIT_S = 300
 _HARNESS_SHUFFLE_PARTITIONS = "8"
 
 
-# keyed on the file fingerprint: events.parquet rewritten in place with
-# another schema must not stream under the old one
-_EVENTS_SCHEMA_CACHE: dict[tuple, object] = register_cache({})
-
-
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of the events table with the same epoch-nanos
     -> microsecond-timestamp normalization as catalog.load_table."""
     ensure_session_confs(spark)
     path = f"{sf_dir}/events.parquet"
     # the footer-read driver job costs ~0.1s and several queries build
-    # this stream twice (both interval-join sides) — cache per file version
-    key = file_fingerprint(sf_dir, "events")
-    schema = _EVENTS_SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _EVENTS_SCHEMA_CACHE[key] = schema
+    # this stream twice (both interval-join sides) — memoize per file
+    # version: events.parquet rewritten in place with another schema
+    # must not stream under the old one
+    schema = session_memo(
+        spark,
+        "events_schema",
+        sf_dir,
+        ("events",),
+        (),
+        lambda: spark.read.parquet(path).schema,
+    )
     # FileStreamSource requires a directory basePath; glob-filter the
     # events file out of the sf_dir
     raw = (

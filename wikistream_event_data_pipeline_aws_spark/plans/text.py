@@ -411,25 +411,18 @@ def _index_topk_from_postings(tok_docs: DataFrame) -> DataFrame:
     )
 
 
-_POSTINGS_SRC_CACHE: dict[str, str] = {}
-
-
 def _postings_stream_src(spark: SparkSession, sf_dir: str) -> str:
-    """Two-file (even/odd doc_id) replay source, built once per
-    (session, sf_dir) — immutable input; bench.warmup pre-builds it
-    with the other setup artifacts."""
-    import tempfile
+    """Two-file (even/odd doc_id) replay source, built once per version
+    of the documents table; bench.warmup pre-builds it with the other
+    setup artifacts."""
+    from ..operators.memo import fixture
+    from ..streaming.ingest import write_parity_replay
 
-    src = _POSTINGS_SRC_CACHE.get(sf_dir)
-    if src is None:
+    def build(base: str) -> str:
         d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        src = tempfile.mkdtemp(prefix="postings_stream_src_") + "/src"
-        for parity in (0, 1):
-            d.filter(F.col("doc_id") % 2 == parity).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-        _POSTINGS_SRC_CACHE[sf_dir] = src
-    return src
+        return write_parity_replay(d, "doc_id", base)
+
+    return fixture("postings_src", sf_dir, ("documents",), build)
 
 
 def streaming_postings_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -451,20 +444,21 @@ def streaming_postings_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.ingest import file_stream, start_postings_sink
 
     src = _postings_stream_src(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="postings_stream_")
-    postings_path, ckpt = f"{tmp}/postings", f"{tmp}/ckpt"
-    stream = file_stream(
-        spark, src, "doc_id bigint, text string", max_files_per_trigger=1
-    )
-    q = start_postings_sink(
-        stream, postings_path, checkpoint_dir=ckpt, trigger={"availableNow": True}
-    )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("postings stream did not finish in 300s")
-    postings = spark.read.parquet(postings_path).select("doc_id", "token")
-    return _index_topk_from_postings(postings)
+    with tempfile.TemporaryDirectory(prefix="postings_stream_", ignore_cleanup_errors=True) as tmp:
+        postings_path, ckpt = f"{tmp}/postings", f"{tmp}/ckpt"
+        stream = file_stream(
+            spark, src, "doc_id bigint, text string", max_files_per_trigger=1
+        )
+        q = start_postings_sink(
+            stream, postings_path, checkpoint_dir=ckpt, trigger={"availableNow": True}
+        )
+        q.awaitTermination(300)
+        if q.isActive:
+            q.stop()
+            raise TimeoutError("postings stream did not finish in 300s")
+        postings = spark.read.parquet(postings_path).select("doc_id", "token")
+        # materialize the small readout so the scratch dir can go now
+        return _index_topk_from_postings(postings).localCheckpoint(eager=True)
 
 
 TEXT_INVERTED_INDEX_SQL = rf"""
@@ -1381,9 +1375,6 @@ FROM win
 TEXT_MUTUAL_INFORMATION_SQL = _mutual_information_sql()
 
 
-_ENTROPY_SRC_CACHE: dict[str, str] = {}
-
-
 def streaming_entropy_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming maintenance of the (source, token) unigram counts
     feeding the entropy/KL readout — the keyed-sum leg of the
@@ -1404,52 +1395,55 @@ def streaming_entropy_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_batches grows; the per-batch delta agg is map-side."""
     import tempfile
 
-    from ..streaming.ingest import file_stream, start_mergeable_sink
+    from ..operators.memo import fixture
+    from ..streaming.ingest import (
+        file_stream,
+        start_mergeable_sink,
+        write_parity_replay,
+    )
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    src = _ENTROPY_SRC_CACHE.get(sf_dir)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="entropy_stream_src_") + "/src"
-        for parity in (0, 1):
-            d.filter(F.col("doc_id") % 2 == parity).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-        _ENTROPY_SRC_CACHE[sf_dir] = src
-    tmp = tempfile.mkdtemp(prefix="entropy_stream_")
-    state_path, ckpt = f"{tmp}/cells", f"{tmp}/ckpt"
-    stream = file_stream(
-        spark,
-        src,
-        "doc_id bigint, source string, text string",
-        max_files_per_trigger=1,
+    src = fixture(
+        "entropy_src",
+        sf_dir,
+        ("documents",),
+        lambda base: write_parity_replay(d, "doc_id", base),
     )
-
-    def _delta(batch_df: DataFrame, batch_id: int) -> DataFrame:
-        toks = batch_df.select(
-            "source", F.explode(tokenize(F.col("text"))).alias("token")
-        )
-        return (
-            toks.groupBy("source", "token")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .select(F.lit(batch_id).alias("batch_id"), "source", "token", "cnt")
+    with tempfile.TemporaryDirectory(prefix="entropy_stream_", ignore_cleanup_errors=True) as tmp:
+        state_path, ckpt = f"{tmp}/cells", f"{tmp}/ckpt"
+        stream = file_stream(
+            spark,
+            src,
+            "doc_id bigint, source string, text string",
+            max_files_per_trigger=1,
         )
 
-    q = start_mergeable_sink(
-        stream,
-        state_path,
-        ckpt,
-        _delta,
-        algebra="set-insert",
-        keys=["batch_id", "source", "token"],
-        trigger={"availableNow": True},
-    )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("entropy stream did not finish in 300s")
-    state = spark.read.parquet(state_path)
-    cell = state.groupBy("source", "token").agg(F.sum("cnt").alias("c"))
-    return _entropy_kl_from_cells(cell)
+        def _delta(batch_df: DataFrame, batch_id: int) -> DataFrame:
+            toks = batch_df.select(
+                "source", F.explode(tokenize(F.col("text"))).alias("token")
+            )
+            return (
+                toks.groupBy("source", "token")
+                .agg(F.count(F.lit(1)).alias("cnt"))
+                .select(F.lit(batch_id).alias("batch_id"), "source", "token", "cnt")
+            )
+
+        q = start_mergeable_sink(
+            stream,
+            state_path,
+            ckpt,
+            _delta,
+            algebra="set-insert",
+            keys=["batch_id", "source", "token"],
+            trigger={"availableNow": True},
+        )
+        q.awaitTermination(300)
+        if q.isActive:
+            q.stop()
+            raise TimeoutError("entropy stream did not finish in 300s")
+        state = spark.read.parquet(state_path)
+        cell = state.groupBy("source", "token").agg(F.sum("cnt").alias("c"))
+        return _entropy_kl_from_cells(cell).localCheckpoint(eager=True)
 
 
 QUERIES = {

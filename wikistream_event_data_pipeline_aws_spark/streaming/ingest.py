@@ -56,6 +56,16 @@ def file_stream(
     )
 
 
+def write_parity_replay(df: DataFrame, key: str, base: str) -> str:
+    """Write ``df`` under ``<base>/src`` as two files, the even then the
+    odd ``key`` rows: a two-micro-batch replay source for
+    :func:`file_stream`. Returns that directory."""
+    src = f"{base}/src"
+    for parity in (0, 1):
+        df.filter(F.col(key) % 2 == parity).coalesce(1).write.mode("append").parquet(src)
+    return src
+
+
 def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
     return (
         spark.readStream.format("rate")
