@@ -8,6 +8,13 @@ ONE JSON line::
 
 ``value`` is the total wall-clock of all benched queries (each executed
 to completion with a count-collapsing action, so the full plan runs).
+
+The regression gate has one noise rule. A query more than 2x AND more
+than 1s slower than its floor is re-run best-of-3, and each of its
+draws records the hypervisor steal over its own window. A query that
+stays slow fails the run when at least one of its draws ran clean
+(steal <= CLEAN_STEAL_PCT); one whose every draw was contaminated is
+reported as a suspect and the run exits 0.
 """
 
 from __future__ import annotations
@@ -17,156 +24,110 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
+
+from perfbench.common import StealMeter  # noqa: E402
+
+# A draw is clean when the hypervisor stole at most this share of CPU
+# time over its own window. Steal inflates single draws 10-35x (one
+# query measured 28x its floor at 7% steal), so a slow draw in a
+# contaminated window proves nothing about the plan; a slow draw in a
+# clean one does.
+CLEAN_STEAL_PCT = 3.0
+# Without a committed floor file for the run's (sf, cpus), the floors
+# are the per-query minima over this many of the latest matching
+# history rows (see extract_min_baseline).
+HISTORY_WINDOW = 25
 
 
-def _regressions(prev_q: dict, cur_q: dict, host_scale: float = 1.0) -> list[dict]:
-    """Hard-gate check (VERDICT r4 item 5): per-query regressions on the
-    common subset that are BOTH >2x the previous timing AND >1s slower
-    in absolute terms — the double condition keeps sub-second noise
-    (worst observed noise ratio 1.67x at 0.3s scale) from tripping the
-    gate while a real plan regression cannot hide.
-
-    ``host_scale`` is the measured cur/prev host-index ratio (>1 means
-    the host is now slower per unit of JVM CPU work — see
-    :func:`_host_index`). The previous timings are scaled up by it
-    before comparison, clamped to [1.0, 2.0]: a measurably slower host
-    proportionally relaxes the bar (round 9: a hypervisor-level ~1.4x
-    uniform slowdown, invisible to loadavg, inflated 224 untouched
-    queries identically), while a faster host never tightens it below
-    the raw timings."""
-    host_scale = min(2.0, max(1.0, host_scale))
+def _regressions(prev_q: dict, cur_q: dict) -> list[dict]:
+    """Per-query regressions on the common subset that are BOTH >2x the
+    floor AND >1s slower in absolute terms — the double condition keeps
+    sub-second noise (worst observed noise ratio 1.67x at 0.3s scale)
+    from tripping the gate while a real plan regression cannot hide."""
     out = []
     for k in sorted(set(prev_q) & set(cur_q)):
-        base = prev_q[k] * host_scale
-        if cur_q[k] > 2.0 * base and cur_q[k] - base > 1.0:
+        if cur_q[k] > 2.0 * prev_q[k] and cur_q[k] - prev_q[k] > 1.0:
             out.append({"query": k, "prev_s": prev_q[k], "now_s": cur_q[k]})
     return out
 
 
-# Absolute degraded-host bounds (VERDICT r9 lesson, extended r11/r12):
-# quiet windows on this host measure host_index 0.44-0.60; a window
-# past 0.70, or hypervisor steal past 3% during the timed loop,
-# distorts individual queries far beyond what any host-scale ratio can
-# express (observed: 28x on one query at idx 0.84 / 7% steal while the
-# index ratio said only 1.6x) — the EXCLUSION of such rows from every
-# gate baseline is the load-bearing guard, not the [1,2] scale clamp.
-# Degraded runs are recorded flagged and can never become a baseline;
-# since r12 they ARE gated, but only in ADVISORY mode against the
-# committed min-extraction baseline (best-of-3 candidate retries,
-# suspect_regressions recorded, rc 0 — see main()).
-DEGRADED_HOST_INDEX = 0.70
-DEGRADED_STEAL_PCT = 3.0
+def _sf(sf_dir: str) -> float | str:
+    """The scale factor named by a ``.../sf<N>`` directory."""
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    return float(sf) if sf.replace(".", "").isdigit() else sf
 
 
-def _cpu_ticks() -> list[int] | None:
-    """(user, nice, system, idle, iowait, irq, softirq, steal) jiffies
-    from /proc/stat, or None off-Linux. The STEAL field is the direct
-    hypervisor-contention signal: ticks this guest's vCPUs were
-    runnable but the host ran someone else — the mechanism behind the
-    loadavg-invisible uniform slowdowns the host index measures."""
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()[1:9]
-    except OSError:  # pragma: no cover - non-Linux
-        return None
-    return [int(v) for v in parts]
+def extract_min_baseline(
+    runs: list[dict], sf: float, cpus: int, window: int | None = None
+) -> dict:
+    """Per-query minimum across the history rows at (sf, cpus), with
+    per-query sample counts. Steal inflates a query's mean 10-35x but
+    barely touches its minimum over repeats, so every row counts, noisy
+    or partial.
+
+    ``window`` keeps only the LAST ``window`` matching rows. An
+    unwindowed min over ~90 heterogeneous runs is an extreme order
+    statistic: it keeps one-off lucky draws from stale eras (another
+    bench format, other cache states) that no current run reproduces,
+    e.g. similarity_embedding_neardup's 1.05s from two early draws
+    while every later run of the same code sat at 2.0-3.3s. A real
+    regression reproduces in every row of the window and cannot hide."""
+    queries: dict[str, float] = {}
+    samples: dict[str, int] = {}
+    matching = [r for r in runs if r.get("sf") == sf and r.get("cpus") == cpus]
+    if window is not None:
+        matching = matching[-window:]
+    for r in matching:
+        for q, t in r.get("queries", {}).items():
+            samples[q] = samples.get(q, 0) + 1
+            if q not in queries or t < queries[q]:
+                queries[q] = t
+    return {
+        "method": (
+            "per-query min across the last "
+            f"{window if window is not None else 'ALL'} recorded runs at (sf, cpus)"
+        ),
+        "sf": sf,
+        "cpus": cpus,
+        "runs_used": len(matching),
+        "queries": queries,
+        "samples": samples,
+    }
 
 
-def _steal_pct(before: list[int] | None, after: list[int] | None) -> float | None:
-    """Percent of ALL cpu ticks between the two snapshots that were
-    stolen by the hypervisor (None when /proc/stat is unavailable)."""
-    if before is None or after is None:
-        return None
-    delta = [b - a for a, b in zip(before, after)]
-    total = sum(delta)
-    return round(100.0 * delta[7] / total, 3) if total > 0 else None
-
-
-def _host_index(spark, cpus: int) -> float:
-    """Measured host-speed reference: median wall-clock of a fixed
-    CPU-bound, I/O-free JVM job (bit_xor of xxhash64 over a 2B-row
-    range, one task per core). Recorded with every history row so
-    round-over-round comparisons can separate plan changes from host
-    drift — the motivating incident (round 9) was identical code
-    measuring 223.3s at 10:18 and 269.3s at 13:08 UTC with loadavg
-    quiet both times. One warm-up run pays the codegen JIT; the three
-    timed runs measure steady-state CPU throughput."""
-    job = lambda: spark.range(0, 2_000_000_000, 1, cpus).selectExpr(  # noqa: E731
-        "bit_xor(xxhash64(id)) as h"
-    ).collect()
-    job()  # codegen JIT warm-up (~4s first run, ~0.6s after)
-    runs = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        job()
-        runs.append(time.perf_counter() - t0)
-    return round(sorted(runs)[1], 4)
+def _read_history(repo_dir: str) -> list[dict]:
+    path = os.path.join(repo_dir, "BENCH_HISTORY.jsonl")
+    if not os.path.exists(path):
+        return []
+    with open(path) as fh:
+        return [json.loads(line) for line in fh if line.strip()]
 
 
 def _standing_baseline(repo_dir: str, sf_dir: str, cpus: int) -> dict | None:
-    """The committed min-extraction baseline (BENCH_BASELINE.json, built
-    by tools/robust_baseline.py — VERDICT r11 item 1), if it matches
-    this run's (sf, cpus). Per-query minima across every recorded run
-    are host-independent in the way single quiet rows are not: steal
-    inflates means 10-35x but barely touches the minimum over repeats,
-    so the gate keeps a trustworthy bar even when the host never offers
-    a quiet window. Returns a row-shaped dict ({"queries", "host_index"})
-    so _host_scale/_regressions consume it like a history row."""
+    """The committed floor file (BENCH_BASELINE.json, built by
+    tools/robust_baseline.py) if it matches this run's (sf, cpus)."""
     path = os.path.join(repo_dir, "BENCH_BASELINE.json")
     if not os.path.exists(path):
         return None
     with open(path) as fh:
         base = json.load(fh)
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    if base.get("sf") != sf_val or base.get("cpus") != cpus:
+    if base.get("sf") != _sf(sf_dir) or base.get("cpus") != cpus:
         return None
     return base
 
 
-def _previous_comparable(repo_dir: str, sf_dir: str, cpus: int) -> dict | None:
-    """The most recent history ROW at the same (sf, cpus), or None —
-    read-only (history is appended later). Callers use ``row["queries"]``
-    and ``row.get("host_index")``."""
-    hist_path = os.path.join(repo_dir, "BENCH_HISTORY.jsonl")
-    if not os.path.exists(hist_path):
-        return None
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    prev = None
-    with open(hist_path) as fh:
-        for line in fh:
-            if not line.strip():
-                continue
-            r = json.loads(line)
-            if (
-                r["sf"] == sf_val
-                and r["cpus"] == cpus
-                and not r.get("contended")
-                and not r.get("degraded_host")
-                # partial rows from tools/spot_measure.py carry only the
-                # re-measured suspects — folding one in here would shrink
-                # the gate to that subset; they feed the min-extraction
-                # baseline instead
-                and not r.get("spot")
-            ):
-                prev = r
-    return prev
+def _floors(repo_dir: str, sf_dir: str, cpus: int) -> dict[str, float]:
+    """Per-query gate floors: the committed file when it matches the
+    run, else the windowed history min ({} when neither has a row)."""
+    base = _standing_baseline(repo_dir, sf_dir, cpus) or extract_min_baseline(
+        _read_history(repo_dir), _sf(sf_dir), cpus, HISTORY_WINDOW
+    )
+    return base["queries"]
 
 
-def _host_scale(prev_row: dict | None, cur_index: float | None) -> float:
-    """cur/prev host-index ratio, defaulting to 1.0 when either side
-    lacks a measurement (rows recorded before round 9)."""
-    if not prev_row or not cur_index:
-        return 1.0
-    prev_index = prev_row.get("host_index")
-    if not prev_index:
-        return 1.0
-    return cur_index / prev_index
-
-
-def _update_history(repo_dir: str, result: dict) -> list[dict]:
+def _update_history(repo_dir: str, result: dict) -> None:
     """Append this run to BENCH_HISTORY.jsonl and regenerate the
     BENCH_HISTORY.md trend table.
 
@@ -178,89 +139,44 @@ def _update_history(repo_dir: str, result: dict) -> list[dict]:
     BENCH_r{N}.json driver artifacts truncate their printed payload)."""
     import datetime
 
-    hist_path = os.path.join(repo_dir, "BENCH_HISTORY.jsonl")
     entry = {
         "at": datetime.datetime.now(datetime.timezone.utc).isoformat(timespec="seconds"),
         "sf": result["sf"],
         "cpus": result["cpus"],
         "queries": result["queries"],
     }
-    if result.get("host_index"):
-        entry["host_index"] = result["host_index"]
-    if result.get("steal_pct") is not None:
-        entry["steal_pct"] = result["steal_pct"]
-    if result.get("contended_load1") is not None:
-        # Contended runs ARE recorded (so repeated contention is visible
-        # in the trend table, not just a one-off stderr line) but carry
-        # a flag that excludes them from every gate baseline: they can
-        # neither trip the regression gate nor become the run a later
-        # quiet run is compared against.
-        entry["contended"] = True
-        entry["contended_load1"] = result["contended_load1"]
-    if result.get("degraded_host"):
-        # same record-but-never-compare contract as contended rows
-        entry["degraded_host"] = True
-    runs = []
-    if os.path.exists(hist_path):
-        with open(hist_path) as fh:
-            runs = [json.loads(line) for line in fh if line.strip()]
-    runs.append(entry)
-    with open(hist_path, "a") as fh:
+    runs = _read_history(repo_dir) + [entry]
+    with open(os.path.join(repo_dir, "BENCH_HISTORY.jsonl"), "a") as fh:
         fh.write(json.dumps(entry, separators=(",", ":")) + "\n")
 
     lines = [
         "# Bench history",
         "",
         "One row per `bench.py` run (same host, `local[N]`). `common total`",
-        "compares against the PREVIOUS run restricted to queries timed in both",
-        "runs — the round-over-round signal; `total` moves with coverage.",
-        "`worst ratio` is the largest per-query this/prev ratio on that subset.",
-        "`host idx` is the measured host-speed reference (median seconds for a",
-        "fixed CPU-bound JVM job, see `bench._host_index`; bigger = slower",
-        "host) — divide totals by the idx ratio before reading a drifted row",
-        "as a regression. Rows before 2026-08-15 predate the measurement.",
-        "Rows flagged ⚠contended ran under sibling load, rows flagged",
-        "⚠degraded ran in a hypervisor-degraded window (host idx > 0.70 or",
-        "steal > 3% — per-query distortion exceeds the gate's host-scale",
-        "clamp): both are recorded for visibility, excluded from every gate",
-        "baseline, never compared.",
+        "compares against the PREVIOUS run at the same (sf, cpus) restricted",
+        "to queries timed in both runs — the round-over-round signal; `total`",
+        "moves with coverage. `worst ratio` is the largest per-query this/prev",
+        "ratio on that subset. The table is a trend, not the gate: the gate",
+        "judges each query against its floor and the steal in its own window",
+        "(per-query `steal_pct` in BENCH_OUT.json).",
         "",
-        "| run (UTC) | sf | cpus | queries | total s | common prev s | common now s | worst ratio | host idx |",
-        "|---|---|---|---|---|---|---|---|---|",
+        "| run (UTC) | sf | cpus | queries | total s | common prev s | common now s | worst ratio |",
+        "|---|---|---|---|---|---|---|---|",
     ]
     # compare each row against the most recent PRIOR row at the same
-    # (sf, cpus) — matching the gate's _previous_comparable — so an
-    # interleaved smoke run at another sf doesn't blank the comparison
+    # (sf, cpus), so an interleaved smoke run at another sf doesn't
+    # blank the comparison
     prev_by_cfg: dict = {}
     for r in runs:
         q = r["queries"]
         prev = prev_by_cfg.get((r["sf"], r["cpus"]))
-        # spot rows (tools/spot_measure.py partials, keyed "ts" not "at")
-        # carry only the re-measured suspects: letting one become prev
-        # would shrink the next row's common subset to that handful
-        if not r.get("contended") and not r.get("degraded_host") and not r.get("spot"):
-            prev_by_cfg[(r["sf"], r["cpus"])] = r
-        at_cell = r.get("at") or r.get("ts", "?")
-        if r.get("spot"):
-            at_cell += " ⚠spot partial"
-        if r.get("contended"):
-            at_cell += f" ⚠contended L={r.get('contended_load1', '?')}"
-        if r.get("degraded_host"):
-            at_cell += f" ⚠degraded idx={r.get('host_index', '?')}"
-        cells = [at_cell, str(r["sf"]), str(r["cpus"]), str(len(q)), f"{sum(q.values()):.1f}"]
-        # contended rows get NO comparison cells (the header promises
-        # they are never compared — a 30x "worst ratio" under sibling
-        # load reads as a regression); same blank when the runs share
-        # zero query names (max() over an empty set would throw AFTER
-        # the timed run, losing BENCH_OUT.json)
-        common = (
-            sorted(set(q) & set(prev["queries"]))
-            if prev is not None
-            and not r.get("contended")
-            and not r.get("degraded_host")
-            and not r.get("spot")
-            else []
-        )
+        prev_by_cfg[(r["sf"], r["cpus"])] = r
+        # a few early partial rows are keyed "ts" rather than "at"
+        cells = [r.get("at") or r.get("ts", "?"), str(r["sf"]), str(r["cpus"]), str(len(q))]
+        cells.append(f"{sum(q.values()):.1f}")
+        # blank when the runs share zero query names (max() over an
+        # empty set would throw AFTER the timed run, losing BENCH_OUT.json)
+        common = sorted(set(q) & set(prev["queries"])) if prev is not None else []
         if common:
             pq = prev["queries"]
             worst = max(
@@ -273,7 +189,6 @@ def _update_history(repo_dir: str, result: dict) -> list[dict]:
             ]
         else:
             cells += ["—", "—", "—"]
-        cells.append(f"{r['host_index']:.2f}" if r.get("host_index") else "—")
         lines.append("| " + " | ".join(cells) + " |")
     # Hand-written analysis sections (variance notes etc.) live below the
     # regenerated table as "## ..." headings — carry them forward verbatim
@@ -288,54 +203,11 @@ def _update_history(repo_dir: str, result: dict) -> list[dict]:
             notes = old[idx:]
     with open(md_path, "w") as fh:
         fh.write("\n".join(lines) + "\n" + notes)
-    comparable = [
-        r
-        for r in runs[:-1]
-        if r["sf"] == entry["sf"]
-        and r["cpus"] == entry["cpus"]
-        and not r.get("contended")
-        and not r.get("degraded_host")
-    ]
-    if entry.get("contended") or entry.get("degraded_host") or not comparable:
-        return []
-    return _regressions(
-        comparable[-1]["queries"],
-        entry["queries"],
-        _host_scale(comparable[-1], entry.get("host_index")),
-    )
-
-
-def _contention() -> tuple[bool, float]:
-    """Detect heavy sibling load BEFORE the timed runs (VERDICT r8
-    item 2: BENCH_r08's rc=1 came from determinism-sweep JVMs sharing
-    the host with the timed run). A 1-minute loadavg above a quarter of
-    the cores means other work is competing for CPU; timings taken now
-    are not comparable, so the run still prints its JSON (rc=0) and IS
-    recorded into history — flagged ``contended`` so repeated skips
-    stay visible in the trend table — but the regression gate does not
-    fire and the row is excluded from every later gate baseline: a
-    contended run can neither trip the gate nor become the baseline
-    that later trips it. Override: SPARK_GRAFT_BENCH_FORCE_GATE=1."""
-    if os.environ.get("SPARK_GRAFT_BENCH_FORCE_GATE"):
-        return False, 0.0
-    try:
-        load1 = os.getloadavg()[0]
-    except OSError:  # pragma: no cover - platform without loadavg
-        return False, 0.0
-    return load1 > 0.25 * (os.cpu_count() or 8), load1
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    contended, load1 = _contention()
-    if contended:
-        print(
-            f"BENCH CONTENTION: loadavg1={load1:.1f} on {os.cpu_count()} cpus "
-            "before the timed runs — recording a contended-flagged history "
-            "row but skipping the regression gate (not comparable)",
-            file=sys.stderr,
-        )
 
     from wikistream_event_data_pipeline_aws_spark import registry
     from wikistream_event_data_pipeline_aws_spark.session import get_spark
@@ -344,20 +216,12 @@ def main() -> None:
 
     qs = registry.queries()
     warmup(spark, sf_dir, qs)
-    # Measure the host-speed reference AFTER the warm-ups and BEFORE the
-    # timed queries, so it reflects the same steady-state JVM the
-    # timings come from. Recorded in the result + history row; the
-    # regression gate scales the previous run's timings by the index
-    # ratio so hypervisor-level host drift (uniform, loadavg-invisible)
-    # doesn't read as a plan regression — and a genuine plan regression
-    # still cannot hide, because the scale is measured, not asserted.
-    host_index = _host_index(spark, cpus)
-    _timed(spark, sf_dir, cpus, qs, contended, load1, host_index)
+    _timed(spark, sf_dir, cpus, qs)
 
 
 def warmup(spark, sf_dir: str, qs: dict) -> None:
-    """Shared pre-timing warm-up (bench + tools/spot_measure.py): JIT /
-    IO / setup-artifact costs paid OUTSIDE every timed run."""
+    """Pre-timing warm-up: JIT / IO / setup-artifact costs paid OUTSIDE
+    every timed run."""
     # Warm the JVM/IO path (codegen JIT + parquet footer cache) once per
     # table family so cold-start cost doesn't land on whichever query
     # happens to sort first; the timed runs then measure the plans.
@@ -433,16 +297,16 @@ def warmup(spark, sf_dir: str, qs: dict) -> None:
     ).count()
 
 
-def _retry_candidates(spark, sf_dir, qs, prev_q, timings, scale, memo_builds) -> list[dict]:
-    """Re-run each gate candidate, keeping its best time, and return the
-    regressions that survive. Each candidate retries until it clears its
-    own threshold or the budget runs out; a real plan regression never
-    clears no matter how many draws. r14 (VERDICT r13 item 9): budget
-    re-tightened 5 -> 3 — the five documented r13 false firings were all
-    against STALE all-history floors (e.g. a 1.05s one-off from a
-    retired bench format); the windowed 25-run baseline ages those out,
-    and best-of-3 keeps the gate's sensitivity to a genuine ~2x
-    regression without re-admitting the tail-draw flakes.
+def _retry_candidates(spark, sf_dir, qs, floors, timings, steal, memo_builds):
+    """Re-run each gate candidate, keeping its best time, and split the
+    survivors by the steal in their windows: ``(regressed, suspects)``.
+
+    Each candidate retries until it clears its own threshold or three
+    retries are spent; a real plan regression never clears. Every draw
+    (the timed run's window, ``steal[name]``, then each retry's) records
+    its steal, and a survivor's every draw is above the bar, so one
+    clean draw convicts it. A survivor with no clean draw is a suspect:
+    nothing this run measured separates its plan from the host.
 
     A candidate whose timed run built a session-memo kernel
     (``memo_builds``, from its MEMO_EVENTS slice) has the memos reset
@@ -450,20 +314,28 @@ def _retry_candidates(spark, sf_dir, qs, prev_q, timings, scale, memo_builds) ->
     a retry would time only the consumer and hide a kernel regression."""
     from wikistream_event_data_pipeline_aws_spark.operators import memo
 
-    for cand in _regressions(prev_q, timings, scale):
+    draws: dict[str, list[float]] = {}
+    for cand in _regressions(floors, timings):
         name = cand["query"]
+        draws[name] = [steal[name]]
         for _ in range(3):
             if name in memo_builds:
                 memo.reset_memos()
+            meter = StealMeter()
             t0 = time.perf_counter()
             qs[name](spark, sf_dir).count()
             timings[name] = round(min(timings[name], time.perf_counter() - t0), 4)
-            if not _regressions({name: prev_q[name]}, {name: timings[name]}, scale):
+            draws[name].append(round(meter.pct(), 3))
+            if not _regressions({name: floors[name]}, {name: timings[name]}):
                 break
-    return _regressions(prev_q, timings, scale)
+    regressed, suspects = [], []
+    for r in _regressions(floors, timings):
+        r["steal_pct"] = draws[r["query"]]
+        (regressed if min(r["steal_pct"]) <= CLEAN_STEAL_PCT else suspects).append(r)
+    return regressed, suspects
 
 
-def _timed(spark, sf_dir, cpus, qs, contended, load1, host_index) -> None:
+def _timed(spark, sf_dir, cpus, qs) -> None:
     timings: dict[str, float] = {}
     # Stateful streaming queries pay a state-store/MicroBatchExecution
     # setup cost with ~1.5x run-to-run variance on this host (r02 verdict:
@@ -478,8 +350,7 @@ def _timed(spark, sf_dir, cpus, qs, contended, load1, host_index) -> None:
     # an already-built kernel (operators/memo.py MEMO_EVENTS) are listed
     # in memo_hits — their per-query seconds are NOT standalone costs
     # (the alphabetically-first consumer paid the kernel, recorded in
-    # memo_builds). tools/spot_measure.py measures standalone floors by
-    # resetting the memos between repeats.
+    # memo_builds).
     from wikistream_event_data_pipeline_aws_spark.operators import memo
 
     memo_hits: dict[str, list[str]] = {}
@@ -491,13 +362,17 @@ def _timed(spark, sf_dir, cpus, qs, contended, load1, host_index) -> None:
 
     codegen_classes: dict[str, int] = {}
     codegen_s: dict[str, float] = {}
+    # hypervisor steal over each query's own timed window: a share over
+    # the whole loop averages a stall away (1.5% over an 8-core run hid
+    # a ~40s stall on one contiguous block of queries)
+    steal_pct: dict[str, float] = {}
 
-    ticks_before = _cpu_ticks()
     for name in sorted(qs):
         fn = qs[name]
         runs: list[float] = []
         ev0 = len(memo.MEMO_EVENTS)
         cg0 = codegen_compiles(spark)
+        meter = StealMeter()
         for _ in range(noisy_repeats if name in noisy else 1):
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
@@ -505,6 +380,7 @@ def _timed(spark, sf_dir, cpus, qs, contended, load1, host_index) -> None:
             runs.append(time.perf_counter() - t0)
             if n < 0:  # pragma: no cover - count() is always >= 0
                 raise RuntimeError(name)
+        steal_pct[name] = round(meter.pct(), 3)
         timings[name] = round(sorted(runs)[len(runs) // 2], 4)
         cg1 = codegen_compiles(spark)
         codegen_classes[name] = cg1[0] - cg0[0]
@@ -518,72 +394,25 @@ def _timed(spark, sf_dir, cpus, qs, contended, load1, host_index) -> None:
             memo_hits[name] = hits
         if builds:
             memo_builds[name] = builds
-    steal_pct = _steal_pct(ticks_before, _cpu_ticks())
-    degraded = not os.environ.get("SPARK_GRAFT_BENCH_FORCE_GATE") and (
-        (host_index is not None and host_index > DEGRADED_HOST_INDEX)
-        or (steal_pct is not None and steal_pct > DEGRADED_STEAL_PCT)
+
+    # Regression gate (the gate's first live firing was a cold-run
+    # artifact: 1.2s -> 2.6s that re-ran warm at 1.0s): candidates are
+    # re-run in the same session before anything fails, and a survivor
+    # is judged by the steal in its own windows (see _retry_candidates).
+    regressed, suspects = _retry_candidates(
+        spark, sf_dir, qs, _floors(REPO, sf_dir, cpus), timings, steal_pct, memo_builds
     )
-    if degraded:
-        print(
-            f"BENCH DEGRADED HOST: host index {host_index} / steal "
-            f"{steal_pct}% — run recorded flagged; hard gate disabled, "
-            "advisory gate vs the standing min-baseline if present "
-            "(SPARK_GRAFT_BENCH_FORCE_GATE=1 overrides)",
-            file=sys.stderr,
-        )
 
-    # Regression-gate retry (the gate's first live firing was a cold-run
-    # artifact: 1.2s -> 2.6s that re-ran warm at 1.0s): before failing,
-    # re-run each candidate in the same session and keep the best time —
-    # a genuine plan regression reproduces, JIT/page-cache/steal noise
-    # does not. The gate baseline is the COMMITTED min-extraction file
-    # when present (host-independent — see _standing_baseline), else the
-    # last quiet history row. On a contended/degraded host the gate runs
-    # in ADVISORY mode against the standing baseline: survivors are
-    # recorded as suspect_regressions without failing the run — a
-    # degraded window cannot convict, but it can point the next quiet
-    # window at what to check. Candidates get best-of-3 retries in BOTH
-    # modes (the per-query minimum is what steal cannot inflate): the
-    # hard gate originally retried once, which on this host's documented
-    # heavy tails (the same unchanged query drew 1.04s and 13.9s across
-    # history rows) made a QUIET window fail on tail draws the advisory
-    # path would have cleared — r13 spot-measures confirmed all five
-    # such hard-gate firings as host tails, zero plan changes.
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    standing = _standing_baseline(repo_dir, sf_dir, cpus)
-    advisory = contended or degraded
-    prev = standing or _previous_comparable(repo_dir, sf_dir, cpus)
-    if advisory and standing is None:
-        prev = None  # raw history rows are not comparable from a degraded run
-    regressed = []
-    if prev is not None:
-        scale = _host_scale(prev, host_index)
-        if not 0.8 <= scale <= 1.25:
-            print(
-                f"BENCH HOST DRIFT: host index {host_index:.2f}s vs "
-                f"{prev.get('host_index'):.2f}s gate baseline "
-                f"({scale:.2f}x) — gate comparisons scaled accordingly",
-                file=sys.stderr,
-            )
-        regressed = _retry_candidates(
-            spark, sf_dir, qs, prev["queries"], timings, scale, memo_builds
-        )
-
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     result = {
         "metric": "total_query_wallclock",
         "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "sf": _sf(sf_dir),
         "cpus": cpus,
-        "host_index": host_index,
+        # file-only detail: per-query steal of the timed window
+        "steal_pct": steal_pct,
     }
-    if steal_pct is not None:
-        # hypervisor ticks stolen DURING the timed loop — read alongside
-        # host_index: a high steal_pct row is slow because of the host,
-        # not the plans
-        result["steal_pct"] = steal_pct
     if noisy_runs:
         # file-only detail: the individual runs behind each median
         result["noisy_query_runs"] = noisy_runs
@@ -595,70 +424,60 @@ def _timed(spark, sf_dir, cpus, qs, contended, load1, host_index) -> None:
         # served by a session-memoized kernel, and who built each kernel
         result["memo_hits"] = memo_hits
         result["memo_builds"] = memo_builds
-    if contended:
-        result["contended_load1"] = round(load1, 2)
-    if degraded:
-        result["degraded_host"] = True
     # Full-precision result -> file (the driver's stdout capture keeps only
     # the last 2000 chars; round 1 lost the head of the line and recorded
     # parsed=null). The printed line is the same JSON shrunk to fit the
     # capture window: 3-decimal timings, and if still too long the fastest
     # queries are dropped from the printed dict (never from the file),
-    # with the omission counted.
-    #
-    # The gate verdict was computed above (standing min-baseline first);
-    # _update_history's own comparable-row comparison is now display-only
-    # (trend table), so its return is ignored. Gate fields land in the
-    # result BEFORE the file write so BENCH_OUT.json records what the run
-    # exits non-zero for; contended/degraded rows stay flagged and out of
-    # every history baseline exactly as before.
-    _update_history(repo_dir, result)
+    # with the omission counted. Gate fields land in the result BEFORE the
+    # file write so BENCH_OUT.json records what the run exits non-zero for.
+    _update_history(REPO, result)
     if regressed:
-        result["suspect_regressions" if advisory else "regressed"] = regressed
-    with open(os.path.join(repo_dir, "BENCH_OUT.json"), "w") as fh:
+        result["regressed"] = regressed
+    if suspects:
+        result["suspect_regressions"] = suspects
+    with open(os.path.join(REPO, "BENCH_OUT.json"), "w") as fh:
         json.dump(result, fh, indent=1, sort_keys=True)
         fh.write("\n")
 
     # The summary JSON line must be the LAST thing this process writes:
     # the driver keeps only the final ~2000 chars of captured output, and
-    # r12 lost the line's head because the advisory gate text + Spark
-    # shutdown logs landed AFTER it in a merged capture (BENCH_r12.json
-    # "parsed": null). So: stop Spark first, emit gate text first, THEN
-    # the line — sized well under the window with a deterministic
-    # truncation ladder (drop fastest queries, then shrink the suspect
-    # list to names) so it always fits whole.
+    # r12 lost the line's head because gate text + Spark shutdown logs
+    # landed AFTER it in a merged capture (BENCH_r12.json "parsed": null).
+    # So: stop Spark first, emit gate text first, THEN the line — sized
+    # well under the window with a deterministic truncation ladder (drop
+    # fastest queries, then shrink the gate lists to names) so it always
+    # fits whole.
     spark.stop()
-    if regressed and advisory:
-        # a degraded/contended window cannot convict (per-query tails hit
-        # 10-35x); suspects are recorded for the next quiet run, rc stays 0
+
+    def _listing(rows: list[dict]) -> str:
+        return ", ".join(
+            f"{r['query']} {r['prev_s']:.2f}s->{r['now_s']:.2f}s (steal {r['steal_pct']}%)"
+            for r in rows
+        )
+
+    if suspects:
+        # every draw ran in a contaminated window: not proof, rc stays 0
         print(
-            "BENCH GATE (advisory — degraded/contended host): "
-            f"{len(regressed)} suspect"
-            f" quer{'y' if len(regressed) == 1 else 'ies'} after best-of-3: "
-            + ", ".join(
-                f"{r['query']} {r['prev_s']:.2f}s->{r['now_s']:.2f}s"
-                for r in regressed
-            ),
+            f"BENCH GATE: {len(suspects)} suspect quer{'y' if len(suspects) == 1 else 'ies'}"
+            f" stayed >2x and >1s slower, every draw with steal > {CLEAN_STEAL_PCT}%: "
+            + _listing(suspects),
             file=sys.stderr,
         )
-    elif regressed:
+    if regressed:
         # failing, not just visible: the driver/CI sees a non-zero rc
-        # whenever a common-subset query regresses >2x AND >1s absolute
+        # whenever a query stays >2x AND >1s slower in a clean window
         print(
             f"BENCH GATE: {len(regressed)} quer{'y' if len(regressed) == 1 else 'ies'}"
-            f" regressed >2x and >1s: "
-            + ", ".join(f"{r['query']} {r['prev_s']:.2f}s->{r['now_s']:.2f}s" for r in regressed),
+            f" regressed >2x and >1s: " + _listing(regressed),
             file=sys.stderr,
         )
     sys.stderr.flush()
 
     budget = 1500
     printed = dict(result)
-    printed.pop("noisy_query_runs", None)
-    printed.pop("memo_hits", None)  # file-only: BENCH_OUT.json
-    printed.pop("memo_builds", None)
-    printed.pop("codegen_classes", None)
-    printed.pop("codegen_s", None)
+    for detail in ("steal_pct", "noisy_query_runs", "memo_hits", "memo_builds", "codegen_classes", "codegen_s"):
+        printed.pop(detail, None)  # file-only: BENCH_OUT.json
     printed["queries"] = {k: round(v, 3) for k, v in timings.items()}
     line = json.dumps(printed, separators=(",", ":"))
     if len(line) > budget:
@@ -673,14 +492,15 @@ def _timed(spark, sf_dir, cpus, qs, contended, load1, host_index) -> None:
             printed["queries_omitted"] = omitted
             printed["full_results"] = "BENCH_OUT.json"
             line = json.dumps(printed, separators=(",", ":"))
-    key = "suspect_regressions" if advisory else "regressed"
-    if len(line) > budget and printed.get(key):
-        # last rung: the per-entry prev/now detail lives in BENCH_OUT.json
-        printed[key] = [r["query"] for r in regressed]
+    if len(line) > budget:
+        # last rung: the per-entry detail lives in BENCH_OUT.json
+        for key in ("regressed", "suspect_regressions"):
+            if printed.get(key):
+                printed[key] = [r["query"] for r in printed[key]]
         line = json.dumps(printed, separators=(",", ":"))
     print(line)
     sys.stdout.flush()
-    if regressed and not advisory:
+    if regressed:
         sys.exit(1)
 
 

@@ -1,7 +1,8 @@
-"""The bench regression gate (VERDICT r4 item 5) is a pure function:
-a common-subset query regresses only when BOTH >2x the previous timing
-AND >1s absolute — sub-second noise can't trip it, a real plan
-regression can't hide under it."""
+"""The bench regression gate: a common-subset query is a candidate only
+when BOTH >2x its floor AND >1s slower — sub-second noise can't trip
+it, a real plan regression can't hide under it — and a candidate that
+stays slow through its retries fails the run only on a draw whose own
+window ran clean of hypervisor steal."""
 
 from __future__ import annotations
 
@@ -25,48 +26,33 @@ def test_no_regressions_is_empty():
     assert _regressions({}, {"a": 100.0}) == []
 
 
-def test_previous_comparable_reads_last_matching_run(tmp_path):
+def test_floors_fall_back_to_windowed_history_min(tmp_path):
+    """With no committed floor file for the run's (sf, cpus), each
+    query's floor is its minimum over the last HISTORY_WINDOW matching
+    history rows: older rows and other configs do not count."""
     import json
 
-    from bench import _previous_comparable
+    from bench import HISTORY_WINDOW, _floors
 
-    hist = tmp_path / "BENCH_HISTORY.jsonl"
-    rows = [
-        {"sf": 0.1, "cpus": 32, "queries": {"a": 1.0}},
-        {"sf": 0.01, "cpus": 32, "queries": {"a": 9.0}},
-        {"sf": 0.1, "cpus": 32, "queries": {"a": 2.0}},
-        {"sf": 0.1, "cpus": 8, "queries": {"a": 5.0}},
+    rows = [{"sf": 0.1, "cpus": 32, "queries": {"a": 0.5, "b": 9.0}}]  # ages out
+    rows += [
+        {"sf": 0.1, "cpus": 32, "queries": {"a": 2.0 + i, "b": 3.0}}
+        for i in range(HISTORY_WINDOW)
     ]
-    hist.write_text("\n".join(json.dumps(r) for r in rows) + "\n")
-    assert _previous_comparable(str(tmp_path), "/x/sf0.1", 32)["queries"] == {"a": 2.0}
-    assert _previous_comparable(str(tmp_path), "/x/sf0.01", 32)["queries"] == {"a": 9.0}
-    assert _previous_comparable(str(tmp_path), "/x/sf1", 16) is None
-    assert _previous_comparable(str(tmp_path / "none"), "/x/sf0.1", 32) is None
-
-
-def test_host_scale_relaxes_gate_for_measured_drift():
-    """A measured host slowdown (round 9: ~1.4x uniform, hypervisor-
-    level, loadavg-quiet) scales the previous timings before the 2x/1s
-    test; a genuine plan regression still fires because the scale is
-    bounded by the measured ratio (clamped to 2x)."""
-    from bench import _host_scale
-
-    prev = {"steady": 2.0, "regressed": 2.0}
-    # steady: 2.25x and +2.5s — fires unscaled, but at a measured 1.4x
-    # host drift its scaled base is 2.8 and 4.5 < 5.6 — drift, not plan
-    cur = {"steady": 4.5, "regressed": 9.0}
-    assert [r["query"] for r in _regressions(prev, cur)] == ["regressed", "steady"]
-    got = _regressions(prev, cur, host_scale=1.4)
-    assert [r["query"] for r in got] == ["regressed"]
-    # faster host never tightens below raw timings (clamped at 1.0)
-    assert _regressions({"a": 2.0}, {"a": 3.5}, host_scale=0.5) == []
-    # scale is capped at 2x — a 10x index blowup cannot hide a 5x query
-    assert [r["query"] for r in _regressions({"a": 2.0}, {"a": 10.0}, 10.0)] == ["a"]
-    # _host_scale defaults to 1.0 when either side lacks a measurement
-    assert _host_scale(None, 0.5) == 1.0
-    assert _host_scale({"queries": {}}, 0.5) == 1.0
-    assert _host_scale({"host_index": 0.5}, None) == 1.0
-    assert _host_scale({"host_index": 0.5}, 0.7) == 1.4
+    rows += [
+        {"sf": 0.01, "cpus": 32, "queries": {"a": 0.1}},
+        {"sf": 0.1, "cpus": 8, "queries": {"a": 0.2}},
+    ]
+    (tmp_path / "BENCH_HISTORY.jsonl").write_text("\n".join(json.dumps(r) for r in rows) + "\n")
+    (tmp_path / "BENCH_BASELINE.json").write_text(
+        json.dumps({"sf": 0.1, "cpus": 8, "queries": {"a": 7.0}})
+    )
+    assert _floors(str(tmp_path), "/x/sf0.1", 32) == {"a": 2.0, "b": 3.0}
+    assert _floors(str(tmp_path), "/x/sf0.01", 32) == {"a": 0.1}
+    # a matching committed file wins over the history
+    assert _floors(str(tmp_path), "/x/sf0.1", 8) == {"a": 7.0}
+    assert _floors(str(tmp_path), "/x/sf1", 16) == {}
+    assert _floors(str(tmp_path / "none"), "/x/sf0.1", 32) == {}
 
 
 def test_update_history_preserves_note_sections(tmp_path):
@@ -90,50 +76,6 @@ def test_update_history_preserves_note_sections(tmp_path):
     assert out.count("## Variance note") == 1 and "keep me" in out
 
 
-def test_contended_runs_recorded_but_never_baseline_or_gated(tmp_path):
-    """A contended run IS appended to history (flagged, so repeated
-    contention stays visible in the trend table) but is excluded from
-    every gate baseline and never itself gated (round-9 ADVICE: the
-    silent-skip version could stop the gate firing indefinitely on a
-    host with persistent modest load, with no record anywhere)."""
-    import json
-
-    from bench import _previous_comparable, _update_history
-
-    quiet = {"sf": 0.1, "cpus": 32, "queries": {"q1": 1.0}}
-    assert _update_history(str(tmp_path), quiet) == []
-    # contended run, wildly slower: recorded + flagged, gate silent
-    contended = {
-        "sf": 0.1,
-        "cpus": 32,
-        "queries": {"q1": 30.0},
-        "contended_load1": 12.3,
-    }
-    assert _update_history(str(tmp_path), contended) == []
-    rows = [
-        json.loads(line)
-        for line in (tmp_path / "BENCH_HISTORY.jsonl").read_text().splitlines()
-    ]
-    assert len(rows) == 2 and rows[1]["contended"] is True
-    md = (tmp_path / "BENCH_HISTORY.md").read_text()
-    contended_row = next(
-        l for l in md.splitlines() if l.startswith("| 2") and "⚠contended" in l
-    )
-    # the header promises contended rows are NEVER compared: the
-    # comparison cells must be blank, not a 30.00x pseudo-regression
-    assert "30.00x" not in contended_row
-    assert contended_row.rstrip().endswith("| — | — | — | — |")
-    # the next quiet run compares against the QUIET row, not the
-    # contended one — so q1 at 2.0s never reads as a 15x improvement,
-    # and a contended 30s baseline can't mask a later real regression
-    assert _previous_comparable(str(tmp_path), "/x/sf0.1", 32)["queries"] == {
-        "q1": 1.0
-    }
-    assert _update_history(str(tmp_path), {**quiet, "queries": {"q1": 2.5}}) == [
-        {"query": "q1", "prev_s": 1.0, "now_s": 2.5}
-    ]
-
-
 def test_disjoint_query_sets_render_blank_comparison(tmp_path):
     """Two runs at the same (sf, cpus) sharing ZERO query names (e.g.
     queries renamed between rounds, or a hand-trimmed history) must not
@@ -141,81 +83,54 @@ def test_disjoint_query_sets_render_blank_comparison(tmp_path):
     raise AFTER the timed run, losing BENCH_OUT.json."""
     from bench import _update_history
 
-    assert _update_history(
-        str(tmp_path), {"sf": 0.1, "cpus": 32, "queries": {"old_q": 1.0}}
-    ) == []
-    assert _update_history(
-        str(tmp_path), {"sf": 0.1, "cpus": 32, "queries": {"new_q": 2.0}}
-    ) == []
+    _update_history(str(tmp_path), {"sf": 0.1, "cpus": 32, "queries": {"old_q": 1.0}})
+    _update_history(str(tmp_path), {"sf": 0.1, "cpus": 32, "queries": {"new_q": 2.0}})
     md = (tmp_path / "BENCH_HISTORY.md").read_text()
     new_row = [l for l in md.splitlines() if l.startswith("| 2")][-1]
-    assert new_row.rstrip().endswith("| 2.0 | — | — | — | — |")
+    assert new_row.rstrip().endswith("| 2.0 | — | — | — |")
 
 
-def test_steal_pct_from_proc_stat_deltas():
-    """steal_pct is the stolen share of ALL cpu ticks between two
-    snapshots; None-safe for platforms without /proc/stat and for
-    zero-width windows."""
-    from bench import _cpu_ticks, _steal_pct
+def test_update_history_renders_every_committed_row(tmp_path):
+    """The trend table renders the committed history as it stands,
+    including the early partial rows keyed ``ts`` rather than ``at``,
+    and appends the new row after them."""
+    import os
+    import shutil
 
-    before = [100, 0, 50, 800, 10, 0, 5, 35]
-    after = [200, 0, 100, 1600, 20, 0, 10, 70]  # deltas sum to 1000, steal 35
-    assert _steal_pct(before, after) == 3.5
-    assert _steal_pct(None, after) is None
-    assert _steal_pct(before, None) is None
-    assert _steal_pct(before, before) is None  # zero-width window
-    ticks = _cpu_ticks()
-    if ticks is not None:  # Linux: 8 monotone counters
-        assert len(ticks) == 8 and all(v >= 0 for v in ticks)
+    from bench import _update_history
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    shutil.copy(os.path.join(repo, "BENCH_HISTORY.jsonl"), tmp_path)
+    n = len((tmp_path / "BENCH_HISTORY.jsonl").read_text().splitlines())
+    _update_history(str(tmp_path), {"sf": 0.1, "cpus": 32, "queries": {"q1": 1.0}})
+    rows = [l for l in (tmp_path / "BENCH_HISTORY.md").read_text().splitlines() if l.startswith("| 2")]
+    assert len(rows) == n + 1
 
 
-def test_degraded_host_runs_recorded_but_never_baseline_or_gated(tmp_path):
-    """A hypervisor-degraded run (host idx past the absolute bound /
-    high steal) carries the same record-but-never-compare contract as
-    a contended one: flagged in history, blank comparison cells,
-    excluded from later baselines, never itself gated. Round-10
-    evidence: at host idx 0.84 / 7% steal one query measured 27x its
-    baseline while the index ratio said only 1.6x — the [1,2]
-    host-scale clamp cannot absorb that, so the run must not produce
-    a red record or poison the next baseline."""
-    import json
+def test_steal_pct_from_proc_stat_deltas(monkeypatch):
+    """The gate's steal share (perfbench.common.StealMeter) is the stolen
+    share of ALL cpu ticks between two /proc/stat snapshots, and 0 for a
+    zero-width window."""
+    import io
 
-    from bench import _previous_comparable, _update_history
+    from perfbench import common
 
-    quiet = {"sf": 0.1, "cpus": 32, "queries": {"q1": 1.0}, "host_index": 0.45}
-    assert _update_history(str(tmp_path), quiet) == []
-    degraded = {
-        "sf": 0.1,
-        "cpus": 32,
-        "queries": {"q1": 27.0},
-        "host_index": 0.84,
-        "degraded_host": True,
-    }
-    assert _update_history(str(tmp_path), degraded) == []
-    rows = [
-        json.loads(line)
-        for line in (tmp_path / "BENCH_HISTORY.jsonl").read_text().splitlines()
+    stats = [
+        "cpu  100 0 50 800 10 0 5 35 0 0\n",
+        "cpu  200 0 100 1600 20 0 10 70 0 0\n",  # deltas sum to 1000, steal 35
     ]
-    assert len(rows) == 2 and rows[1]["degraded_host"] is True
-    md = (tmp_path / "BENCH_HISTORY.md").read_text()
-    degraded_row = next(
-        l for l in md.splitlines() if l.startswith("| 2") and "⚠degraded" in l
-    )
-    assert "27.00x" not in degraded_row
-    assert degraded_row.rstrip().endswith("| — | — | — | 0.84 |")
-    assert _previous_comparable(str(tmp_path), "/x/sf0.1", 32)["queries"] == {
-        "q1": 1.0
-    }
-    assert _update_history(str(tmp_path), {**quiet, "queries": {"q1": 2.5}}) == [
-        {"query": "q1", "prev_s": 1.0, "now_s": 2.5}
-    ]
+    monkeypatch.setattr(common, "open", lambda path: io.StringIO(stats.pop(0)), raising=False)
+    assert common.StealMeter().pct() == 3.5
+    stats += ["cpu  1 2 3 4 5 6 7 8\n"] * 2
+    assert common.StealMeter().pct() == 0.0
+    monkeypatch.undo()
+    assert common.StealMeter().pct() >= 0.0  # Linux: real counters
 
 
 def test_min_extraction_builds_host_independent_baseline():
     """VERDICT r11 item 1: the standing baseline is the per-query MIN
-    across every recorded run at (sf, cpus) — degraded rows included,
-    because steal inflates means but not minima — paired with the
-    minimum host_index so measured-host scaling can only relax."""
+    across every recorded run at (sf, cpus) — noisy rows included,
+    because steal inflates means but not minima."""
     import os
     import sys
 
@@ -228,20 +143,13 @@ def test_min_extraction_builds_host_independent_baseline():
     from robust_baseline import extract_min_baseline
 
     runs = [
-        {"sf": 0.1, "cpus": 32, "host_index": 0.53, "queries": {"a": 1.0, "b": 5.0}},
-        {
-            "sf": 0.1,
-            "cpus": 32,
-            "host_index": 0.90,
-            "degraded_host": True,
-            "queries": {"a": 0.8, "b": 50.0, "c": 2.0},
-        },
+        {"sf": 0.1, "cpus": 32, "queries": {"a": 1.0, "b": 5.0}},
+        {"sf": 0.1, "cpus": 32, "queries": {"a": 0.8, "b": 50.0, "c": 2.0}},
         {"sf": 0.01, "cpus": 32, "queries": {"a": 0.1}},
         {"sf": 0.1, "cpus": 8, "queries": {"a": 0.2}},
     ]
     base = extract_min_baseline(runs, 0.1, 32)
     assert base["queries"] == {"a": 0.8, "b": 5.0, "c": 2.0}
-    assert base["host_index"] == 0.53
     assert base["runs_used"] == 2
     assert base["samples"] == {"a": 2, "b": 2, "c": 1}
     # r13 restart: the window keeps only the LAST N matching runs —
@@ -250,7 +158,6 @@ def test_min_extraction_builds_host_independent_baseline():
     recent = extract_min_baseline(runs, 0.1, 32, window=1)
     assert recent["queries"] == {"a": 0.8, "b": 50.0, "c": 2.0}
     assert recent["runs_used"] == 1
-    assert recent["host_index"] == 0.90
     both = extract_min_baseline(runs, 0.1, 32, window=2)
     assert both["queries"] == {"a": 0.8, "b": 5.0, "c": 2.0}
     assert both["runs_used"] == 2
@@ -264,7 +171,7 @@ def test_standing_baseline_loads_only_matching_config(tmp_path):
     path = tmp_path / "BENCH_BASELINE.json"
     path.write_text(
         json.dumps(
-            {"sf": 0.1, "cpus": 32, "host_index": 0.44, "queries": {"a": 1.0}}
+            {"sf": 0.1, "cpus": 32, "queries": {"a": 1.0}}
         )
     )
     row = _standing_baseline(str(tmp_path), "/data/sf0.1", 32)
@@ -296,44 +203,7 @@ def test_committed_baseline_covers_full_registry():
                 if len(r.get("queries", {})) >= len(last_full):
                     last_full = set(r["queries"])
     assert last_full <= set(base["queries"])
-    assert base["host_index"] is not None
     assert all(v > 0 for v in base["queries"].values())
-
-
-def test_spot_partial_rows_render_and_never_become_prev(tmp_path):
-    """Regression test for the round-13 bench crash: a spot_measure
-    partial row (keyed ``ts`` not ``at``, flagged ``spot``) must not
-    KeyError the trend-table rebuild, must not become the display
-    comparison baseline (it carries only the re-measured suspects), and
-    must not itself be compared."""
-    import json
-
-    from bench import _update_history
-
-    quiet = {"sf": 0.1, "cpus": 32, "queries": {"q1": 1.0, "q2": 2.0}}
-    assert _update_history(str(tmp_path), quiet) == []
-    spot_row = {
-        "ts": "2026-08-17T01:14:23Z",
-        "spot": True,
-        "sf": 0.1,
-        "cpus": 32,
-        "host_index": 0.62,
-        "steal_pct": 7.8,
-        "queries": {"q1": 9.0},
-    }
-    with open(tmp_path / "BENCH_HISTORY.jsonl", "a") as fh:
-        fh.write(json.dumps(spot_row) + "\n")
-    # the next full run must rebuild the table without crashing and
-    # compare against the QUIET row (both queries), not the spot partial
-    assert _update_history(
-        str(tmp_path), {"sf": 0.1, "cpus": 32, "queries": {"q1": 1.1, "q2": 2.1}}
-    ) == []
-    md = (tmp_path / "BENCH_HISTORY.md").read_text()
-    spot_line = next(l for l in md.splitlines() if "⚠spot partial" in l)
-    assert "9.00x" not in spot_line  # spot rows are never compared
-    last = [l for l in md.splitlines() if l.startswith("| 2")][-1]
-    # common-subset cells cover both queries => prev was the quiet row
-    assert "| 3.0 | 3.2 |" in last
 
 
 def test_robust_baseline_refuses_rising_floors(tmp_path):
@@ -350,7 +220,7 @@ def test_robust_baseline_refuses_rising_floors(tmp_path):
     hist = tmp_path / "hist.jsonl"
     out = tmp_path / "base.json"
     row = {"at": "2026-08-18T00:00:00+00:00", "sf": 0.1, "cpus": 32,
-           "host_index": 0.5, "queries": {"q1": 3.0, "q2": 1.0}}
+           "queries": {"q1": 3.0, "q2": 1.0}}
     hist.write_text(json.dumps(row) + "\n")
     out.write_text(json.dumps({"sf": 0.1, "cpus": 32,
                                "queries": {"q1": 1.0, "q2": 1.0}}))
@@ -364,6 +234,99 @@ def test_robust_baseline_refuses_rising_floors(tmp_path):
     assert json.loads(out.read_text())["queries"]["q1"] == 3.0
 
 
+class _Steal:
+    """Stand-in for perfbench.common.StealMeter: each window opened
+    reports the next value of ``pcts``."""
+
+    pcts: list[float] = []
+
+    def __init__(self):
+        self._pct = _Steal.pcts.pop(0)
+
+    def pct(self) -> float:
+        return self._pct
+
+
+def _run_timed(monkeypatch, tmp_path, steal: list[float]):
+    """bench._timed over two fake queries with 1s floors on a fake clock:
+    ``fine`` takes 1s, ``slow`` 3s on every draw. ``steal`` feeds the
+    windows in order: the timed runs (fine, slow), then slow's retries.
+    Returns (exit code, BENCH_OUT.json)."""
+    import json
+
+    import bench
+    from wikistream_event_data_pipeline_aws_spark import session
+
+    clock = [0.0]
+    monkeypatch.setattr(bench.time, "perf_counter", lambda: clock[0])
+    monkeypatch.setattr(_Steal, "pcts", list(steal))
+    monkeypatch.setattr(bench, "StealMeter", _Steal)
+    monkeypatch.setattr(session, "codegen_compiles", lambda spark: (0, 0.0))
+    monkeypatch.setattr(bench, "REPO", str(tmp_path))
+    (tmp_path / "BENCH_BASELINE.json").write_text(
+        json.dumps({"sf": 0.01, "cpus": 4, "queries": {"fine": 1.0, "slow": 1.0}})
+    )
+
+    def query(seconds):
+        class Result:
+            def count(self):
+                clock[0] += seconds
+                return 1
+
+        return lambda spark, sf_dir: Result()
+
+    class Spark:
+        def stop(self):
+            pass
+
+    qs = {"fine": query(1.0), "slow": query(3.0)}
+    try:
+        bench._timed(Spark(), "/x/sf0.01", 4, qs)
+        rc = 0
+    except SystemExit as e:
+        rc = e.code
+    assert not _Steal.pcts  # every window was measured
+    return rc, json.loads((tmp_path / "BENCH_OUT.json").read_text())
+
+
+def test_gate_convicts_a_regression_in_clean_windows(monkeypatch, tmp_path, capsys):
+    import json
+
+    rc, out = _run_timed(monkeypatch, tmp_path, [0.2, 0.5, 0.4, 0.3, 0.6])
+    assert rc == 1
+    assert out["regressed"] == [
+        {"query": "slow", "prev_s": 1.0, "now_s": 3.0, "steal_pct": [0.5, 0.4, 0.3, 0.6]}
+    ]
+    assert "suspect_regressions" not in out
+    assert out["steal_pct"] == {"fine": 0.2, "slow": 0.5}
+    # the JSON line is the last thing written, and it names the regression
+    last = json.loads(capsys.readouterr().out.splitlines()[-1])
+    assert [r["query"] for r in last["regressed"]] == ["slow"]
+
+
+def test_gate_holds_an_all_contaminated_regression_as_suspect(monkeypatch, tmp_path):
+    """Every draw of the survivor ran with steal above the bar: nothing
+    measured separates its plan from the host, so the run exits 0 and
+    reports the suspect with each draw's steal."""
+    rc, out = _run_timed(monkeypatch, tmp_path, [0.2, 9.0, 7.5, 12.0, 4.0])
+    assert rc == 0
+    assert "regressed" not in out
+    assert out["suspect_regressions"] == [
+        {"query": "slow", "prev_s": 1.0, "now_s": 3.0, "steal_pct": [9.0, 7.5, 12.0, 4.0]}
+    ]
+
+
+def test_one_clean_draw_convicts(monkeypatch, tmp_path):
+    """Every draw of a survivor is above the bar, so a single draw at or
+    below CLEAN_STEAL_PCT among contaminated ones is enough."""
+    import bench
+
+    steal = [0.2, 9.0, 7.5, bench.CLEAN_STEAL_PCT, 12.0]
+    rc, out = _run_timed(monkeypatch, tmp_path, steal)
+    assert rc == 1 and [r["query"] for r in out["regressed"]] == ["slow"]
+    assert "suspect_regressions" not in out
+
+
 def test_gate_retry_rebuilds_memo_kernel_the_timed_run_built(monkeypatch):
     """A candidate whose timed run built a session-memo kernel is retried
     from reset memos: a retry served by the memo that run left behind
@@ -374,6 +337,8 @@ def test_gate_retry_rebuilds_memo_kernel_the_timed_run_built(monkeypatch):
 
     clock = [0.0]
     monkeypatch.setattr(bench.time, "perf_counter", lambda: clock[0])
+    monkeypatch.setattr(_Steal, "pcts", [0.0] * 4)
+    monkeypatch.setattr(bench, "StealMeter", _Steal)
     kernel: dict = {}
     monkeypatch.setattr(memo, "reset_memos", kernel.clear)
 
@@ -390,17 +355,37 @@ def test_gate_retry_rebuilds_memo_kernel_the_timed_run_built(monkeypatch):
 
     qs = {"consumer": lambda spark, sf_dir: Result(), "other": lambda spark, sf_dir: Result()}
     prev = {"consumer": 1.0, "other": 1.0}
+    steal = {"consumer": 0.0, "other": 0.0}
     try:
         # the timed run built the kernel: every retry rebuilds it and
         # the 3x regression stands
         timings = {"consumer": 3.0, "other": 1.0}
-        got = bench._retry_candidates(None, "/x", qs, prev, timings, 1.0, {"consumer": ["k"]})
-        assert [r["query"] for r in got] == ["consumer"]
+        regressed, suspects = bench._retry_candidates(
+            None, "/x", qs, prev, timings, steal, {"consumer": ["k"]}
+        )
+        assert [r["query"] for r in regressed] == ["consumer"] and suspects == []
         assert timings["consumer"] == 3.0
         # a timed run that was itself a memo hit keeps the memo: its
         # retries time the same consumer-only work
         timings = {"consumer": 3.0, "other": 1.0}
-        assert bench._retry_candidates(None, "/x", qs, prev, timings, 1.0, {}) == []
+        assert bench._retry_candidates(None, "/x", qs, prev, timings, steal, {}) == ([], [])
         assert timings["consumer"] == 0.1
     finally:
         kernel.clear()
+
+
+def test_only_perfbench_common_reads_proc_stat():
+    """perfbench.common.StealMeter is the one steal meter: no other
+    source file names /proc/stat, so a second hand-rolled copy of it
+    cannot come back."""
+    import re
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    meter = repo / "perfbench" / "common.py"
+    literal = re.compile(r"""["']/proc/stat["']""")
+    assert literal.search(meter.read_text())
+    tops = [p for p in repo.iterdir() if not p.name.startswith(".") and p.name != "spark-warehouse"]
+    sources = [p for top in tops for p in ([top] if top.is_file() else top.rglob("*")) if p.suffix == ".py"]
+    offenders = [str(p.relative_to(repo)) for p in sources if p != meter and literal.search(p.read_text())]
+    assert not offenders, offenders

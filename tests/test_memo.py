@@ -83,8 +83,8 @@ def test_stale_fingerprint_evicted_on_insert(spark, tmp_path):
 
 def test_memo_events_and_reset(spark, tmp_path):
     """Hit/build telemetry feeds bench's memo_hits transparency; a
-    reset forces the next call to rebuild (spot_measure standalone
-    floors)."""
+    reset forces the next call to rebuild (the bench gate's retries of
+    a query whose timed run built a kernel)."""
     sf = _sf(tmp_path, "sf")
     ev0 = len(memo.MEMO_EVENTS)
     memo.session_memo(spark, "k1", sf, ("t",), (), lambda: _df(spark, 1))

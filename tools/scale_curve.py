@@ -510,8 +510,8 @@ def bootstrap_b_family(
         "time_exponent": round(exp_t, 3),
         # the hard linearity verdict rides on the shuffle-row exponent
         # alone; the wall-clock exponent (two timed points on a host
-        # with documented steal windows) is reported separately as
-        # advisory so a contended run can't flip the gate
+        # with documented steal windows) is reported separately, outside
+        # the verdict, so a noisy run can't flip the gate
         "linear": exp_c < EXPONENT_LIMIT,
         "time_linear": exp_t < EXPONENT_LIMIT,
         "gated": True,

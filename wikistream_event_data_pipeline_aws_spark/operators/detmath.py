@@ -49,7 +49,8 @@ _ODD = tuple(range(3, 27, 2))  # series denominators 3..25 (12 Horner levels)
 
 
 def _bitlen(col: Column) -> Column:
-    """Bit length of a positive BIGINT — floor(log2(n))+1, exactly."""
+    """Bit length of a positive BIGINT — floor(log2(n))+1, exactly, via
+    the binary-string length (same primitive as the HLL rho)."""
     return F.length(F.conv(col.cast("string"), 10, 2)).cast("int")
 
 

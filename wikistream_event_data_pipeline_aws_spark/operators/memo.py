@@ -55,7 +55,7 @@ from pyspark.sql import SparkSession
 T = TypeVar("T")
 
 # (kind, label) audit trail: kind is "hit" | "build". Consumed (and
-# sliced by index) by bench._timed and tools/spot_measure.py.
+# sliced by index) by bench._timed.
 MEMO_EVENTS: list[tuple[str, str]] = []
 
 # (label, app_id, sf_dir, fingerprints, *consts) -> built value; a
@@ -68,10 +68,10 @@ def log_memo_event(kind: str, label: str) -> None:
 
 
 def reset_memos() -> None:
-    """Drop every session memo (tools/spot_measure.py, bench retries:
-    the next call of a memoized query rebuilds its kernel). The
-    checkpointed blocks are reclaimed by Spark's ContextCleaner once
-    the dropped DataFrames are garbage-collected."""
+    """Drop every session memo (bench gate retries: the next call of a
+    memoized query rebuilds its kernel). The checkpointed blocks are
+    reclaimed by Spark's ContextCleaner once the dropped DataFrames are
+    garbage-collected."""
     for k in [k for k in _STORE if k[1] is not None]:
         del _STORE[k]
 

@@ -27,6 +27,7 @@ partition by storage locality, never shuffle the blobs.
 from __future__ import annotations
 
 import struct
+import sys
 import zlib
 from collections.abc import Iterator
 
@@ -34,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .. import ship_by_value
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -745,12 +748,4 @@ def media_signals(df: DataFrame) -> DataFrame:
 # module-level helpers (the codec functions), which cloudpickle
 # serializes by module reference unless this leaf module ships by value
 # — see wikistream_event_data_pipeline_aws_spark.ship_by_value.
-def _register_shipping() -> None:
-    import sys
-
-    from .. import ship_by_value
-
-    ship_by_value(sys.modules[__name__])
-
-
-_register_shipping()
+ship_by_value(sys.modules[__name__])

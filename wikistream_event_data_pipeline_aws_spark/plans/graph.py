@@ -401,6 +401,12 @@ def graph_khop_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of twice (plain .distinct() exchanged on both keys, then the
     # origin rollup re-exchanged). Values identical: distinct == group
     # by both keys; same-window A/B 3.5-4.0s -> 2.4s.
+    # Skew: origin is a part key, so the clustering spreads over (nearly)
+    # every part. Measured at sf0.1: 2,577,114 union rows over 19,965
+    # distinct origins (of 20,000 parts); the heaviest origin holds 459
+    # rows (p50 122, p99 306, 3.6x the mean), 0.02% of the input, so no
+    # single key can dominate a partition. The per-origin row count is
+    # the 2-hop fan-out, bounded as the docstring says.
     reach = (
         hop1.unionAll(hop2)
         .repartition("origin")

@@ -29,18 +29,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from .similarity import _COS_SQL, _sq_dist
 
 K = 4
 DIM = 64
-
-
-def _sq_dist(x: Column, c: Column) -> Column:
-    """Left-fold Σ (x_i - c_i)² in double, dim order."""
-    return F.aggregate(
-        F.zip_with(x, c, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
 
 
 def assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -465,12 +457,10 @@ def semdedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ONE exact-cosine oracle fragment repo-wide (the ::DOUBLE[] casts are
-# no-ops on these already-DOUBLE[] operands): two hand-synced copies of
-# a parity-critical expression would drift on the next association-order
-# tweak
-from .similarity import _COS_SQL  # noqa: E402
-
+# ONE exact-cosine oracle fragment repo-wide (similarity._COS_SQL; the
+# ::DOUBLE[] casts are no-ops on these already-DOUBLE[] operands): two
+# hand-synced copies of a parity-critical expression would drift on the
+# next association-order tweak
 SEMDEDUP_SQL = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS x FROM embeddings),
 aug AS (

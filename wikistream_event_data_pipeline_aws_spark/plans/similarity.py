@@ -1603,7 +1603,7 @@ PQ_CODES = 16
 
 def _sq_dist(x: Column | str, c: Column | str) -> Column:
     """Left-fold Σ(x_i−c_i)² in double, dim order — the bit-stable twin
-    of ``_PQ_DIST_SQL`` (same shape as plans/kmeans._sq_dist)."""
+    of ``_PQ_DIST_SQL``; plans/kmeans scores its centroids with it too."""
     return F.aggregate(
         F.zip_with(
             F.col(x) if isinstance(x, str) else x,

@@ -4,11 +4,11 @@ language-ID heuristic, quality scoring, token counting, fingerprinting).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.detmath import det_ln_ratio
+from ..operators.detmath import _bitlen, det_ln_ratio
 from ..operators.textops import STOPWORDS, bpe_piece_count, fingerprint, tokenize
 
 _TOKS_SQL = r"string_split_regex(trim(text), '\s+')"
@@ -682,16 +682,6 @@ FROM documents GROUP BY lang
 
 
 CONTEXT_WINDOW_FIT_SQL = _context_fit_sql()
-
-
-
-
-def _bitlen(col: Column) -> Column:
-    """floor(log2(x)) + 1 for a positive integer column, EXACTLY, via
-    the binary-string length (same primitive as the HLL rho) — the
-    integer-quantized logarithm that keeps cross-engine parity where
-    ln()/log() (not correctly rounded, no bit guarantee) would break it."""
-    return F.length(F.conv(col.cast("string"), 10, 2))
 
 
 def text_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:

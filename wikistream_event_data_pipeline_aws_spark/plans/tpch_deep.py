@@ -37,10 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-
-
-def _dec(col: str, prec: int = 12, scale: int = 2):
-    return F.col(col).cast(f"decimal({prec},{scale})")
+from .tpch import _dec
 
 
 def _disc_price():

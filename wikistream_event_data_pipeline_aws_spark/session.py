@@ -65,6 +65,30 @@ LOCALFS_CONFS = {
 }
 
 
+# Runtime SQL confs every engine session carries: get_spark sets them on
+# the builder, ensure_session_confs on a session someone else built.
+RUNTIME_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    NANOS_CONF: "true",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # partition dirs like event_date=2024-01-19 stay strings on read
+    "spark.sql.sources.partitionColumnTypeInference.enabled": "false",
+    # r13 optimization (guide §2.4): let joins reuse an existing
+    # partitioning on a SUBSET of the join keys instead of forcing a
+    # re-exchange on all keys. The engine's iterative plans (unigram
+    # min-plus squaring, BPE rounds) deliberately cluster by a
+    # high-cardinality key (word) and join on superset keys — the
+    # skew hazard this conf guards against (few distinct subset
+    # values) does not apply, and the determinism sweep verifies
+    # results are partitioning-invariant.
+    "spark.sql.requireAllClusterKeysForCoPartition": "false",
+    # repeated plans reuse their compiled classes (see the constant)
+    CODEGEN_ID_IN_CLASS_NAME: "false",
+}
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -89,31 +113,13 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config(NANOS_CONF, "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # partition dirs like event_date=2024-01-19 stay strings on read
-        .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-        # r13 optimization (guide §2.4): let joins reuse an existing
-        # partitioning on a SUBSET of the join keys instead of forcing a
-        # re-exchange on all keys. The engine's iterative plans (unigram
-        # min-plus squaring, BPE rounds) deliberately cluster by a
-        # high-cardinality key (word) and join on superset keys — the
-        # skew hazard this conf guards against (few distinct subset
-        # values) does not apply, and the determinism sweep verifies
-        # results are partitioning-invariant.
-        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-        # repeated plans reuse their compiled classes (see the constants)
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        .config(CODEGEN_ID_IN_CLASS_NAME, "false")
     )
-    for k, v in with_localfs(extra_confs).items():
+    for k, v in {**RUNTIME_CONFS, **with_localfs(extra_confs)}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -138,15 +144,8 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
     session (e.g. the verification driver's) behaves identically to one
     built by :func:`get_spark`. All of these are runtime SQL confs.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set(NANOS_CONF, "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    # subset-key co-partition reuse (see get_spark) — runtime-settable
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    spark.conf.set(CODEGEN_ID_IN_CLASS_NAME, "false")
+    for k, v in RUNTIME_CONFS.items():
+        spark.conf.set(k, v)
     # Match get_spark's broadcast band: a driver-provided session with the
     # stock 10MB threshold would silently demote the dimension joins the
     # local plan tests validate as broadcast into sort-merge joins —

@@ -39,6 +39,8 @@ Design for scale:
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -46,6 +48,8 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import StructType
+
+from .. import ship_by_value
 
 _SCHEMA = "line_no bigint, event_json string"
 
@@ -171,12 +175,4 @@ class SSEReplayDataSource(DataSource):
 # Worker-context independence: Python workers unpickle the DataSource
 # CLASS by module reference unless this leaf module ships by value —
 # see wikistream_event_data_pipeline_aws_spark.ship_by_value.
-def _register_shipping() -> None:
-    import sys
-
-    from .. import ship_by_value
-
-    ship_by_value(sys.modules[__name__])
-
-
-_register_shipping()
+ship_by_value(sys.modules[__name__])
