@@ -98,15 +98,21 @@ def test_memo_events_and_reset(spark, tmp_path):
 
 def test_no_cache_outside_memo_module():
     """Every memo and fixture lives in operators/memo.py's one store: no
-    other module of the package keeps a module-level *_CACHE dict or
-    registers a cache of its own."""
+    other module of the package keeps a module-level *_CACHE dict,
+    registers a cache of its own, or keeps build-once tables on disk
+    (a spark-warehouse directory, a _SUCCESS completion test)."""
     cache_dict = re.compile(r"^_?[A-Z0-9_]*_CACHE\b[^=]*=\s*(\{|dict\(|register_cache)", re.M)
     offenders = []
     for path in sorted(PACKAGE.rglob("*.py")):
         if path == Path(memo.__file__).resolve():
             continue
         src = path.read_text()
-        if cache_dict.search(src) or "register_cache" in src:
+        if (
+            cache_dict.search(src)
+            or "register_cache" in src
+            or "spark-warehouse" in src
+            or "_SUCCESS" in src
+        ):
             offenders.append(str(path.relative_to(PACKAGE)))
     assert not offenders, offenders
 
@@ -138,12 +144,11 @@ def test_fixture_follows_an_in_place_rewrite(spark, tmp_path):
     assert spark.read.parquet(src2).count() == 6
 
 
-def test_sse_capture_follows_an_in_place_rewrite(spark, tmp_path, monkeypatch):
-    """The content-addressed SSE capture is looked up per call: events
+def test_sse_capture_follows_an_in_place_rewrite(spark, tmp_path):
+    """The SSE capture is keyed on the events file's fingerprint: events
     rewritten in place get a new capture, not the old one."""
-    from wikistream_event_data_pipeline_aws_spark.plans import pyapi, snapshots
+    from wikistream_event_data_pipeline_aws_spark.plans import pyapi
 
-    monkeypatch.setattr(snapshots, "_WAREHOUSE", str(tmp_path / "warehouse"))
     sf_dir = str(tmp_path / "sf")
     os.makedirs(sf_dir)
 
@@ -162,6 +167,39 @@ def test_sse_capture_follows_an_in_place_rewrite(spark, tmp_path, monkeypatch):
     assert cap2 != cap1
     with open(cap2, encoding="utf-8") as f:
         assert len(f.readlines()) == 5
+
+
+def test_setup_tables_follow_their_input_files(spark, sf_dir, tmp_path):
+    """Setup tables are keyed on the files they read, not on the sf_dir's
+    basename: an sf_dir sharing the test scale factor's basename but
+    holding a subset of orders and events gets its own snapshot,
+    bucketed and partitioned tables, and so does a rewrite of those
+    files in place. Each query must match its oracle on the current
+    files."""
+    import pyarrow.parquet as pq
+
+    from tests.oracle_harness import TABLES, compare, duckdb_con
+    from wikistream_event_data_pipeline_aws_spark import registry
+
+    subset = tmp_path / os.path.basename(os.path.normpath(sf_dir))
+    subset.mkdir()
+    for t in TABLES:
+        if t not in ("orders", "events"):
+            os.symlink(os.path.join(sf_dir, t + ".parquet"), subset / f"{t}.parquet")
+
+    def write_subsets(every: int) -> None:
+        for t in ("orders", "events"):
+            tbl = pq.read_table(os.path.join(sf_dir, t + ".parquet"))
+            pq.write_table(tbl.take(list(range(0, tbl.num_rows, every))), subset / f"{t}.parquet")
+
+    qs, oracles = registry.queries(), registry.oracles()
+    names = ("snapshot_time_travel", "bucketed_join_colocated", "partitioned_scan_pruning")
+    for every in (2, 3):
+        write_subsets(every)
+        con = duckdb_con(str(subset))
+        for name in names:
+            problems = compare(qs[name](spark, str(subset)), con.execute(oracles[name]).df())
+            assert not problems, f"{name} (row step {every}): " + "; ".join(problems)
 
 
 def test_fused_seed_serves_both_simhash_kernels(spark):

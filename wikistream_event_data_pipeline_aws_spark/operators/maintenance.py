@@ -67,8 +67,8 @@ def _fs(spark: SparkSession, path: str):
 def list_partition_files(spark: SparkSession, path: str) -> list[PartitionInventory]:
     """Inventory a (possibly hive-partitioned) parquet table via the
     Hadoop FS API: one entry per leaf directory holding data files,
-    sorted by partition dir then file name. Metadata files (``_SUCCESS``,
-    checksums, hidden files) are excluded — they are not data and must
+    sorted by partition dir then file name. Metadata files (Spark's job
+    commit marker, checksums, hidden files) are excluded — they are not data and must
     not count toward bin sizes."""
     fs, root = _fs(spark, path)
     base = root.toUri().getPath()

@@ -3,9 +3,11 @@
 Several analysis queries consume the same expensive kernel (the minhash
 pair set, the simhash band joins, the BPE pipeline, the graph edge
 list, the kNN and LSH top-k); without sharing, each re-runs it from the
-parquet scan. The streaming replays read source files that are a pure
-function of one input table. Both kinds are built once and served from
-one store, under one key format::
+parquet scan. The streaming replays read source files, and the
+versioned, partitioned and bucketed queries read setup tables (snapshot
+histories, hive-partitioned and bucketed copies, the SSE capture), all
+pure functions of their input tables. Every kind is built once and
+served from one store, under one key format::
 
     (label, app_id, sf_dir, fingerprint of each table read, *consts)
 
@@ -13,8 +15,10 @@ one store, under one key format::
 - ``app_id`` is the SparkContext's application id. A session memo dies
   with its context, so nothing memoized survives a session and every
   bench or oracle process computes from its parquet inputs. Fixtures
-  (:func:`fixture`) carry ``None`` here: they are files on disk and
-  outlive the session that wrote them.
+  (:func:`fixture`) carry ``None`` here: they are files in a temp
+  directory and outlive the session that wrote them, but not the
+  process (no fixture is shared across processes, and nothing is
+  written into the checkout).
 - The fingerprint (path, size, mtime_ns per data file) turns an input
   rewritten in place into a miss, not a stale answer.
 - ``consts`` are the algorithm constants the built plan bakes in
@@ -26,6 +30,8 @@ other applications (a dead context must not pin checkpointed blocks)
 and same-label, same-sf_dir entries whose fingerprint differs (their
 input was rewritten). A superseded fixture's directory is removed with
 its entry, and every fixture directory is removed at interpreter exit.
+A failed build removes its directory, so a half-written fixture is
+never served.
 
 The store keeps whatever ``build()`` returns; builds fence their own
 results, because only the kernel knows its shape (typically a lazy

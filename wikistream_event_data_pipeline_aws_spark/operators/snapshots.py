@@ -709,7 +709,7 @@ def snapshot_abort(path: str, staging_id: str) -> list[str]:
             removed.append(f)
     commit_dir = os.path.join(path, DATA_DIR, f"staged-{staging_id}")
     if os.path.isdir(commit_dir):
-        # sweep Spark's _SUCCESS / .crc leftovers so the dir actually
+        # sweep Spark's commit-marker / .crc leftovers so the dir actually
         # disappears (parquet files are already gone)
         for leftover in os.listdir(commit_dir):
             os.remove(os.path.join(commit_dir, leftover))

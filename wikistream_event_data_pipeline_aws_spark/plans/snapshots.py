@@ -9,8 +9,8 @@ never sees the versioned storage: it recomputes what each snapshot
 a non-isolated overwrite, or a rollback that rewrote rather than
 re-pointed all surface as value-hash mismatches.
 
-Version script (deterministic, rebuilt once per scale factor behind a
-manifest marker):
+Version script (deterministic; each versioned table is a setup table
+built once per version of the orders file, ``operators/memo.fixture``):
   v1 append    orders with o_orderkey % 10 < 5
   v2 append    orders with o_orderkey % 10 IN (5, 6)   (disjoint)
   v3 overwrite orders with o_orderstatus = 'F'
@@ -19,8 +19,6 @@ manifest marker):
 
 from __future__ import annotations
 
-import os
-import shutil
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,12 +26,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators import snapshots as snap
-
-_WAREHOUSE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    os.pardir,
-    "spark-warehouse",
-)
+from ..operators.memo import fixture
 
 
 def _key_sig():
@@ -48,40 +41,28 @@ def _key_sig():
 N_VERSIONS = 4
 
 
-def _snap_path(sf_dir: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return os.path.abspath(os.path.join(_WAREHOUSE, f"orders_snap_{tag}"))
-
-
 def build_snapshot_table(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the 4-version history once per scale factor (the
-    v4 manifest is the completion marker, same discipline as
-    ``plans/partitioned.write_evolution_tables``)."""
-    path = _snap_path(sf_dir)
-    cur = snap.current_version(path)
-    if cur == N_VERSIONS:
+    """Materialize the 4-version history once per version of the
+    orders file."""
+
+    def build(path: str) -> str:
+        orders = load_table(spark, sf_dir, "orders")
+        snap.snapshot_write(
+            spark, path, orders.filter(F.col("o_orderkey") % 10 < 5), mode="append"
+        )
+        snap.snapshot_write(
+            spark,
+            path,
+            orders.filter((F.col("o_orderkey") % 10).isin(5, 6)),
+            mode="append",
+        )
+        snap.snapshot_write(
+            spark, path, orders.filter(F.col("o_orderstatus") == "F"), mode="overwrite"
+        )
+        snap.rollback(path, 2)
         return path
-    if cur is not None:
-        # a partially built history cannot be resumed — appending the
-        # script onto stale versions would corrupt every later read;
-        # wipe and rebuild from scratch (the _SUCCESS-marker discipline,
-        # adapted to a versioned store where the marker is version N)
-        shutil.rmtree(path, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders")
-    snap.snapshot_write(
-        spark, path, orders.filter(F.col("o_orderkey") % 10 < 5), mode="append"
-    )
-    snap.snapshot_write(
-        spark,
-        path,
-        orders.filter((F.col("o_orderkey") % 10).isin(5, 6)),
-        mode="append",
-    )
-    snap.snapshot_write(
-        spark, path, orders.filter(F.col("o_orderstatus") == "F"), mode="overwrite"
-    )
-    snap.rollback(path, 2)
-    return path
+
+    return fixture("orders_snap", sf_dir, ("orders",), build)
 
 
 def snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -197,35 +178,27 @@ SELECT 4,
 N_MOR_VERSIONS = 3
 
 
-def _mor_path(sf_dir: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return os.path.abspath(os.path.join(_WAREHOUSE, f"orders_mor_{tag}"))
-
-
 def build_mor_table(spark: SparkSession, sf_dir: str) -> str:
     """Merge-on-read history: v1 = orders slice (%10 < 5), v2 =
     equality-DELETE of keys %9 == 0 (a tiny delete file, no data
     rewrite), v3 = append that RE-INSERTS the deleted keys ending in 0
     — the sequence-semantics probe: v3's re-inserted rows must survive
     v2's older delete."""
-    path = _mor_path(sf_dir)
-    cur = snap.current_version(path)
-    if cur == N_MOR_VERSIONS:
+
+    def build(path: str) -> str:
+        orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
+        v1 = orders.filter(F.col("o_orderkey") % 10 < 5)
+        snap.snapshot_write(spark, path, v1, mode="append")
+        snap.snapshot_delete(
+            spark, path, v1.filter(F.col("o_orderkey") % 9 == 0), ["o_orderkey"]
+        )
+        reinserted = v1.filter(
+            (F.col("o_orderkey") % 9 == 0) & (F.col("o_orderkey") % 10 == 0)
+        )
+        snap.snapshot_write(spark, path, reinserted, mode="append")
         return path
-    if cur is not None:
-        # see build_snapshot_table: partial builds rebuild, never resume
-        shutil.rmtree(path, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
-    v1 = orders.filter(F.col("o_orderkey") % 10 < 5)
-    snap.snapshot_write(spark, path, v1, mode="append")
-    snap.snapshot_delete(
-        spark, path, v1.filter(F.col("o_orderkey") % 9 == 0), ["o_orderkey"]
-    )
-    reinserted = v1.filter(
-        (F.col("o_orderkey") % 9 == 0) & (F.col("o_orderkey") % 10 == 0)
-    )
-    snap.snapshot_write(spark, path, reinserted, mode="append")
-    return path
+
+    return fixture("orders_mor", sf_dir, ("orders",), build)
 
 
 def snapshot_mor_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,11 +247,6 @@ FROM labeled GROUP BY version
 N_MORPOS_VERSIONS = 4
 
 
-def _morpos_path(sf_dir: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return os.path.abspath(os.path.join(_WAREHOUSE, f"orders_morpos_{tag}"))
-
-
 def build_morpos_table(spark: SparkSession, sf_dir: str) -> str:
     """Merge-on-read history exercising BOTH Iceberg v2 delete
     encodings with sequence scoping (reference table property
@@ -296,26 +264,23 @@ def build_morpos_table(spark: SparkSession, sf_dir: str) -> str:
     position deletes (which name v1's file paths) must leave it alone.
     A reader that applies either delete encoding to the new file, or
     matches positions across files, diverges on the v4 fingerprint."""
-    path = _morpos_path(sf_dir)
-    cur = snap.current_version(path)
-    if cur == N_MORPOS_VERSIONS:
+
+    def build(path: str) -> str:
+        orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
+        v1 = orders.filter(F.col("o_orderkey") % 10 < 5)
+        # multiple data files so positions are genuinely file-relative
+        snap.snapshot_write(spark, path, v1.repartition(4, "o_orderkey"), mode="append")
+        snap.snapshot_delete(
+            spark, path, v1.filter(F.col("o_orderkey") % 9 == 0), ["o_orderkey"]
+        )
+        snap.snapshot_delete_positions(spark, path, F.col("o_orderkey") % 7 == 0)
+        reinserted = v1.filter(
+            (F.col("o_orderkey") % 9 == 0) | (F.col("o_orderkey") % 7 == 0)
+        )
+        snap.snapshot_write(spark, path, reinserted, mode="append")
         return path
-    if cur is not None:
-        # see build_snapshot_table: partial builds rebuild, never resume
-        shutil.rmtree(path, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
-    v1 = orders.filter(F.col("o_orderkey") % 10 < 5)
-    # multiple data files so positions are genuinely file-relative
-    snap.snapshot_write(spark, path, v1.repartition(4, "o_orderkey"), mode="append")
-    snap.snapshot_delete(
-        spark, path, v1.filter(F.col("o_orderkey") % 9 == 0), ["o_orderkey"]
-    )
-    snap.snapshot_delete_positions(spark, path, F.col("o_orderkey") % 7 == 0)
-    reinserted = v1.filter(
-        (F.col("o_orderkey") % 9 == 0) | (F.col("o_orderkey") % 7 == 0)
-    )
-    snap.snapshot_write(spark, path, reinserted, mode="append")
-    return path
+
+    return fixture("orders_morpos", sf_dir, ("orders",), build)
 
 
 def snapshot_mor_position_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -362,14 +327,6 @@ FROM labeled GROUP BY version
 """
 
 
-N_TAG_VERSIONS = 3
-
-
-def _tag_path(sf_dir: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return os.path.abspath(os.path.join(_WAREHOUSE, f"orders_tagged_{tag}"))
-
-
 def build_tagged_table(spark: SparkSession, sf_dir: str) -> str:
     """Tag-retention history (Iceberg ref semantics, ``create_tag`` +
     ``expire_snapshots``): v1 = orders %10 < 5, TAGGED 'audit'; v2 =
@@ -377,33 +334,24 @@ def build_tagged_table(spark: SparkSession, sf_dir: str) -> str:
     ``expire_snapshots(keep_last=1)``. The expire drops untagged,
     unshared history (v2's manifest — its files survive because v3
     still references them) but MUST retain the tagged v1 in full: the
-    tag is a GC root. Completion marker: version 3 present AND the
-    'audit' ref resolving to 1."""
-    path = _tag_path(sf_dir)
-    try:
-        if (
-            snap.current_version(path) == N_TAG_VERSIONS
-            and snap.resolve_ref(path, "audit") == 1
-        ):
-            return path
-    except FileNotFoundError:
-        pass
-    if snap.current_version(path) is not None:
-        # see build_snapshot_table: partial builds rebuild, never resume
-        shutil.rmtree(path, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-    snap.snapshot_write(
-        spark, path, orders.filter(F.col("o_orderkey") % 10 < 5), mode="append"
-    )
-    snap.create_tag(path, "audit", 1)
-    snap.snapshot_write(
-        spark, path, orders.filter(F.col("o_orderstatus") == "F"), mode="overwrite"
-    )
-    snap.snapshot_write(
-        spark, path, orders.filter(F.col("o_orderkey") % 10 == 6), mode="append"
-    )
-    snap.expire_snapshots(path, keep_last=1)
-    return path
+    tag is a GC root."""
+
+    def build(path: str) -> str:
+        orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
+        snap.snapshot_write(
+            spark, path, orders.filter(F.col("o_orderkey") % 10 < 5), mode="append"
+        )
+        snap.create_tag(path, "audit", 1)
+        snap.snapshot_write(
+            spark, path, orders.filter(F.col("o_orderstatus") == "F"), mode="overwrite"
+        )
+        snap.snapshot_write(
+            spark, path, orders.filter(F.col("o_orderkey") % 10 == 6), mode="append"
+        )
+        snap.expire_snapshots(path, keep_last=1)
+        return path
+
+    return fixture("orders_tagged", sf_dir, ("orders",), build)
 
 
 def snapshot_tag_retention_read(spark: SparkSession, sf_dir: str) -> DataFrame:

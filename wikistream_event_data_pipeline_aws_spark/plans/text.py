@@ -1365,6 +1365,20 @@ FROM win
 TEXT_MUTUAL_INFORMATION_SQL = _mutual_information_sql()
 
 
+def _entropy_stream_src(spark: SparkSession, sf_dir: str) -> str:
+    """Two-file (even/odd doc_id) replay source with the source column,
+    built once per version of the documents table; bench.warmup
+    pre-builds it with the other setup artifacts."""
+    from ..operators.memo import fixture
+    from ..streaming.ingest import write_parity_replay
+
+    def build(base: str) -> str:
+        d = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
+        return write_parity_replay(d, "doc_id", base)
+
+    return fixture("entropy_src", sf_dir, ("documents",), build)
+
+
 def streaming_entropy_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming maintenance of the (source, token) unigram counts
     feeding the entropy/KL readout — the keyed-sum leg of the
@@ -1385,20 +1399,9 @@ def streaming_entropy_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_batches grows; the per-batch delta agg is map-side."""
     import tempfile
 
-    from ..operators.memo import fixture
-    from ..streaming.ingest import (
-        file_stream,
-        start_mergeable_sink,
-        write_parity_replay,
-    )
+    from ..streaming.ingest import file_stream, start_mergeable_sink
 
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    src = fixture(
-        "entropy_src",
-        sf_dir,
-        ("documents",),
-        lambda base: write_parity_replay(d, "doc_id", base),
-    )
+    src = _entropy_stream_src(spark, sf_dir)
     with tempfile.TemporaryDirectory(prefix="entropy_stream_", ignore_cleanup_errors=True) as tmp:
         state_path, ckpt = f"{tmp}/cells", f"{tmp}/ckpt"
         stream = file_stream(
