@@ -144,6 +144,31 @@ def test_fixture_follows_an_in_place_rewrite(spark, tmp_path):
     assert spark.read.parquet(src2).count() == 6
 
 
+def test_first_fixture_removes_dead_processes_fixture_dirs(tmp_path, monkeypatch):
+    """Fixtures live under a per-process ``wikistream-fixtures-<pid>``
+    directory, and a process's first fixture removes the directories of
+    processes no longer running — a killed process runs no exit hook —
+    while a running process's directory stays."""
+    import tempfile
+
+    # above the largest pid_max Linux allows: names no running process
+    dead = tmp_path / f"{memo.FIXTURE_ROOT_PREFIX}{2**22 + 1}"
+    live = tmp_path / f"{memo.FIXTURE_ROOT_PREFIX}{os.getppid()}"
+    for d in (dead, live):
+        (d / "scd2_fixture_x").mkdir(parents=True)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(memo, "_fixture_root", None)
+    sf = _sf(tmp_path, "sf")
+    built = memo.fixture("t_root", sf, ("t",), lambda d: d)
+    try:
+        assert not dead.exists() and (live / "scd2_fixture_x").is_dir()
+        own = tmp_path / f"{memo.FIXTURE_ROOT_PREFIX}{os.getpid()}"
+        assert Path(built).parent == own and Path(built).is_dir()
+    finally:
+        for k in _labels_in_store("t_root"):
+            del memo._STORE[k]
+
+
 def test_sse_capture_follows_an_in_place_rewrite(spark, tmp_path):
     """The SSE capture is keyed on the events file's fingerprint: events
     rewritten in place get a new capture, not the old one."""

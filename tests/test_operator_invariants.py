@@ -959,13 +959,11 @@ class TestSessionContinuationAnalytics:
                 )
             prev = r
 
-    def test_streaming_hll_merge_is_idempotent_and_matches_batch(self, spark, sf_dir):
+    def test_streaming_hll_merge_is_idempotent_and_matches_batch(self, spark, sf_dir, tmp_path):
         """Replaying the whole stream a second time (fresh checkpoint,
         same register table) leaves the registers bit-identical — the
         max-merge algebra, not the checkpoint, carries exactly-once.
         And the streamed registers equal the one-pass batch registers."""
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from wikistream_event_data_pipeline_aws_spark.catalog import load_table
@@ -975,7 +973,7 @@ class TestSessionContinuationAnalytics:
             start_hll_sink,
         )
 
-        tmp = tempfile.mkdtemp(prefix="hll_idem_")
+        tmp = str(tmp_path)
         src, regs_path = f"{tmp}/src", f"{tmp}/regs"
         e = load_table(spark, sf_dir, "events").select("user_id")
         for parity in (0, 1):
@@ -1936,7 +1934,7 @@ class TestRound5NewOps:
             )
 
 
-def test_int8_codes_handle_empty_and_ragged_embeddings(spark):
+def test_int8_codes_handle_empty_and_ragged_embeddings(spark, tmp_path):
     """mapInArrow reduceat hardening: empty embedding lists are undefined
     segments for np.*.reduceat (they'd grab the next vector's first code,
     or raise when the empty vector is last) — they must surface NULL
@@ -1945,7 +1943,6 @@ def test_int8_codes_handle_empty_and_ragged_embeddings(spark):
     from wikistream_event_data_pipeline_aws_spark.plans.similarity import (
         embedding_int8_codes,
     )
-    import tempfile
 
     rows = [
         (1, [0.5, -1.0]),          # codes 64, -127
@@ -1953,7 +1950,7 @@ def test_int8_codes_handle_empty_and_ragged_embeddings(spark):
         (3, [0.25]),               # code 32
         (4, []),                   # empty LAST vector (reduceat IndexError case)
     ]
-    sf_dir = tempfile.mkdtemp(prefix="int8_edge_")
+    sf_dir = str(tmp_path)
     spark.createDataFrame(
         rows, "vec_id long, embedding array<double>"
     ).write.parquet(f"{sf_dir}/embeddings.parquet")

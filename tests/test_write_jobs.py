@@ -1,15 +1,23 @@
-"""Spark-job budget of the medallion cycle's writes.
+"""Spark-job budget of the medallion cycle's and the bronze stream's writes.
 
 A cold ``upsert_parquet`` never reads its target, so it writes the source
 in one job: no eager checkpoint, no separate ``count()``. A DQ gate's
 audit append is one job of one task: its rows are built in the JVM as a
-single partition, with no ``repartition(1)`` shuffle. Jobs are counted
-per job group through ``sc.statusTracker()``.
+single partition, with no ``repartition(1)`` shuffle. A warm
+``insert_only_parquet`` materializes its source once, reads the target's
+keys with a pinned schema and checkpoints the anti-join: 4 jobs, 3 for a
+full replay, so a streaming drain into it costs 2 jobs for its first
+trigger and 4 for each later one. Jobs are counted per job group through
+``sc.statusTracker()``.
 """
 
 from __future__ import annotations
 
+import os
 import uuid
+
+import pytest
+from pyspark.sql import functions as F
 
 from wikistream_event_data_pipeline_aws_spark.dq.audit import AuditWriter
 from wikistream_event_data_pipeline_aws_spark.dq.checks import (
@@ -18,7 +26,24 @@ from wikistream_event_data_pipeline_aws_spark.dq.checks import (
     DQCheckResult,
     DQGateResult,
 )
-from wikistream_event_data_pipeline_aws_spark.operators.merge import upsert_parquet
+from wikistream_event_data_pipeline_aws_spark.operators.merge import (
+    insert_only_parquet,
+    upsert_parquet,
+)
+from wikistream_event_data_pipeline_aws_spark.streaming.ingest import (
+    file_stream,
+    start_merge_sink,
+    start_validated_merge_sink,
+)
+
+
+def _group_jobs(spark, group):
+    """The ids of the Spark jobs run under job group ``group``."""
+    sc = spark.sparkContext
+    # job events reach the status store through the asynchronous
+    # listener bus; drain it so every job of the group is visible
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sc.statusTracker().getJobIdsForGroup(group)
 
 
 def _run_counted(spark, fn):
@@ -31,11 +56,8 @@ def _run_counted(spark, fn):
         result = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    # job events reach the status store through the asynchronous
-    # listener bus; drain it so every job of the group is visible
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    job_ids = _group_jobs(spark, group)
     tracker = sc.statusTracker()
-    job_ids = tracker.getJobIdsForGroup(group)
     tasks = sum(
         tracker.getStageInfo(stage).numTasks
         for job in job_ids
@@ -66,3 +88,88 @@ def test_audit_gate_write_is_one_job_one_task(spark, tmp_path):
     _, jobs, tasks = _run_counted(spark, lambda: w.write_gate(spark, gate, "2024-01-01"))
     assert (jobs, tasks) == (1, 1)
     assert w.read_results(spark).count() == 3
+
+
+def _events(spark, rows):
+    return spark.createDataFrame(rows, "k long, v string, pt string")
+
+
+def _files(path):
+    """(relpath, size, mtime_ns) of every file under ``path``."""
+    out = set()
+    for root, _, names in os.walk(path):
+        for name in names:
+            st = os.stat(os.path.join(root, name))
+            out.add((os.path.relpath(os.path.join(root, name), path), st.st_size, st.st_mtime_ns))
+    return out
+
+
+def test_warm_partitioned_insert_is_four_jobs(spark, tmp_path):
+    path = str(tmp_path / "t")
+    first = [(1, "a", "d1"), (None, "n", "d1"), (2, "b", "d2")]
+    insert_only_parquet(spark, path, _events(spark, first), ["k"], partition_by=["pt"])
+    # the NULL key and k=2 exist already: the null-safe anti-join drops both
+    batch = _events(spark, [(None, "n", "d1"), (2, "b", "d2"), (3, "c", "d2"), (4, "d", "d3")])
+    n, jobs, _ = _run_counted(
+        spark, lambda: insert_only_parquet(spark, path, batch, ["k"], partition_by=["pt"])
+    )
+    assert jobs <= 4  # materialize, anti-join checkpoint with its broadcast, append
+    assert n == 2
+    rows = spark.read.parquet(path).select("k", "v", "pt").collect()
+    assert sorted(map(tuple, rows), key=str) == sorted(
+        first + [(3, "c", "d2"), (4, "d", "d3")], key=str
+    )
+
+
+@pytest.mark.parametrize("partition_by", [["pt"], None], ids=["partitioned", "unpartitioned"])
+def test_full_replay_is_three_jobs_and_writes_nothing(spark, tmp_path, partition_by):
+    path = str(tmp_path / "t")
+    batch = _events(spark, [(1, "a", "d1"), (None, "n", "d1"), (2, "b", "d2")])
+    assert insert_only_parquet(spark, path, batch, ["k"], partition_by=partition_by) == 3
+    before = _files(path)
+    n, jobs, _ = _run_counted(
+        spark, lambda: insert_only_parquet(spark, path, batch, ["k"], partition_by=partition_by)
+    )
+    assert (n, _files(path)) == (0, before)
+    assert jobs <= 3  # materialize, anti-join checkpoint with its broadcast
+
+
+def _landing(spark, tmp_path):
+    """Three one-file micro-batches, 14 rows: every file after the first
+    re-delivers one key of the file before."""
+    landing = str(tmp_path / "landing")
+    for i in range(3):
+        rows = [(10 * i + j, f"v{i}", f"d{j % 2}") for j in range(4)]
+        if i:
+            rows.append((10 * (i - 1), f"v{i - 1}", "d0"))
+        _events(spark, rows).coalesce(1).write.mode("append").parquet(landing)
+    return file_stream(spark, landing, "k long, v string, pt string", max_files_per_trigger=1)
+
+
+def test_merge_sink_drain_job_budget(spark, tmp_path):
+    table = str(tmp_path / "bronze")
+    q = start_merge_sink(
+        _landing(spark, tmp_path), table, ["k"], str(tmp_path / "ckpt"),
+        trigger={"availableNow": True}, partition_by=["pt"],
+    )
+    q.awaitTermination()
+    # the streaming engine runs every job of the query under its run id
+    assert len(_group_jobs(spark, str(q.runId))) <= 10  # 2 cold + 4 + 4
+    # each micro-batch is read once: a second action on batch_df would
+    # read its files again and count their rows again
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 14
+    keys = [r.k for r in spark.read.parquet(table).collect()]
+    assert sorted(keys) == sorted(10 * i + j for i in range(3) for j in range(4))
+
+
+def test_validated_merge_sink_reads_each_batch_once(spark, tmp_path):
+    q = start_validated_merge_sink(
+        _landing(spark, tmp_path), str(tmp_path / "bronze"), str(tmp_path / "dlq"),
+        ["k"], str(tmp_path / "ckpt"), valid=F.col("k") % 2 == 0,
+        trigger={"availableNow": True}, partition_by=["pt"],
+    )
+    q.awaitTermination()
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 14
+    good = sorted(r.k for r in spark.read.parquet(str(tmp_path / "bronze")).collect())
+    bad = sorted(r.k for r in spark.read.parquet(str(tmp_path / "dlq")).collect())
+    assert (good, bad) == ([0, 2, 10, 12, 20, 22], [1, 3, 11, 13, 21, 23])

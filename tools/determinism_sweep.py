@@ -67,6 +67,9 @@ def main() -> int:
     for name, fn in entry.queries().items():
         if ONLY and name not in ONLY:
             continue
+        # on stderr, where Spark logs, so a logged error follows the
+        # name of the query that raised it
+        print(f"query {name}", file=sys.stderr, flush=True)
         try:
             pdf = fn(spark, SF_DIR).toPandas()
             cols = sorted(pdf.columns)

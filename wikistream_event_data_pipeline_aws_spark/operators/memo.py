@@ -31,7 +31,10 @@ and same-label, same-sf_dir entries whose fingerprint differs (their
 input was rewritten). A superseded fixture's directory is removed with
 its entry, and every fixture directory is removed at interpreter exit.
 A failed build removes its directory, so a half-written fixture is
-never served.
+never served. A process killed by a signal runs no exit hook, so each
+process keeps its fixtures under one ``wikistream-fixtures-<pid>``
+directory in the temp dir, and a process's first fixture removes the
+directories of processes that are no longer running.
 
 The store keeps whatever ``build()`` returns; builds fence their own
 results, because only the kernel knows its shape (typically a lazy
@@ -67,6 +70,10 @@ MEMO_EVENTS: list[tuple[str, str]] = []
 # (label, app_id, sf_dir, fingerprints, *consts) -> built value; a
 # fixture entry has app_id None and holds (directory, built value)
 _STORE: dict[tuple, object] = {}
+
+# every fixture directory of process <pid> lives in <temp dir>/<prefix><pid>
+FIXTURE_ROOT_PREFIX = "wikistream-fixtures-"
+_fixture_root: str | None = None
 
 
 def log_memo_event(kind: str, label: str) -> None:
@@ -151,6 +158,32 @@ def is_memoized(
     return _key(label, spark.sparkContext.applicationId, sf_dir, tables, consts) in _STORE
 
 
+def _pid_running(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)  # signal 0: an existence check, nothing is sent
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # running, under another user
+        return True
+    return True
+
+
+def _fixture_parent() -> str:
+    """This process's fixture parent directory. The first call creates it
+    and removes the parent directories of processes no longer running
+    (killed before their exit hook could)."""
+    global _fixture_root
+    if _fixture_root is None:
+        tmp = tempfile.gettempdir()
+        for name in os.listdir(tmp):
+            pid = name[len(FIXTURE_ROOT_PREFIX):]
+            if name.startswith(FIXTURE_ROOT_PREFIX) and pid.isdigit() and not _pid_running(int(pid)):
+                shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
+        _fixture_root = os.path.join(tmp, f"{FIXTURE_ROOT_PREFIX}{os.getpid()}")
+        os.makedirs(_fixture_root, exist_ok=True)
+    return _fixture_root
+
+
 def fixture(label: str, sf_dir: str, tables: tuple, build: Callable[[str], T]) -> T:
     """Return what ``build(directory)`` returned for the current files
     of ``tables`` under ``sf_dir``, calling it once per file version
@@ -160,7 +193,7 @@ def fixture(label: str, sf_dir: str, tables: tuple, build: Callable[[str], T]) -
         return _STORE[key][1]
     for path, _ in _evict(key):
         shutil.rmtree(path, ignore_errors=True)
-    path = tempfile.mkdtemp(prefix=f"{label}_")
+    path = tempfile.mkdtemp(prefix=f"{label}_", dir=_fixture_parent())
     try:
         value = build(path)
     except BaseException:
@@ -172,6 +205,5 @@ def fixture(label: str, sf_dir: str, tables: tuple, build: Callable[[str], T]) -
 
 @atexit.register
 def _remove_fixture_dirs() -> None:
-    for k, v in list(_STORE.items()):
-        if k[1] is None:
-            shutil.rmtree(v[0], ignore_errors=True)
+    if _fixture_root is not None:
+        shutil.rmtree(_fixture_root, ignore_errors=True)

@@ -30,6 +30,16 @@ SURVEY §4). The partition-scoped path assumes the partition value is
 stable per merge key (event_date is a pure function of the event
 timestamp in every pipeline table) — the same assumption the
 reference's partition-pruned MERGE predicates encode.
+
+Job budget of the streaming sink's body, :func:`insert_only_parquet`:
+on a small micro-batch the cost is the number of Spark jobs, not the
+rows, and inside ``foreachBatch`` every action on the batch re-runs its
+whole plan. So the batch is materialized once, with its row count and
+touched partitions observed on that one job; the target's keys are read
+with a pinned schema (no inference job); and the anti-join keeps its own
+eager checkpoint, which cuts the lineage off the files the append writes
+into and lets a full replay return before any write. A warm batch runs 4
+jobs, a full replay 3, a cold table's first batch 2, an empty batch 1.
 """
 
 from __future__ import annotations
@@ -37,8 +47,9 @@ from __future__ import annotations
 import functools
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:
@@ -52,26 +63,33 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return fs.exists(hadoop_path)
 
 
-def source_partition_filter(
-    source: DataFrame, partition_by: Sequence[str]
-):
-    """Pruning predicate selecting exactly the partitions present in
-    ``source``. The distinct partition-tuple list is collected (it is
-    one row per touched partition — bounded by the batch's date spread,
-    not by data volume) and compiled to an OR-of-conjunctions that the
-    parquet scan turns into PartitionFilters."""
-    tuples = source.select(*partition_by).distinct().collect()
+def partition_predicate(partition_by: Sequence[str], tuples: Sequence) -> Column:
+    """Pruning predicate selecting exactly the partitions in ``tuples``
+    (one value per ``partition_by`` column each, in that order; a NULL
+    value selects the null partition), compiled to an
+    OR-of-conjunctions that the parquet scan turns into
+    PartitionFilters. No tuples selects nothing."""
     if not tuples:
         return F.lit(False)
 
-    def one(row):
+    def one(values):
         terms = [
-            F.col(c).isNull() if row[c] is None else (F.col(c) == F.lit(row[c]))
-            for c in partition_by
+            F.col(c).isNull() if v is None else (F.col(c) == F.lit(v))
+            for c, v in zip(partition_by, values)
         ]
         return functools.reduce(lambda a, b: a & b, terms)
 
-    return functools.reduce(lambda a, b: a | b, (one(r) for r in tuples))
+    return functools.reduce(lambda a, b: a | b, (one(t) for t in tuples))
+
+
+def source_partition_filter(source: DataFrame, partition_by: Sequence[str]) -> Column:
+    """:func:`partition_predicate` over the partitions present in
+    ``source``. The distinct partition-tuple list is collected in one
+    job (one row per touched partition — bounded by the batch's date
+    spread, not by data volume)."""
+    return partition_predicate(
+        partition_by, source.select(*partition_by).distinct().collect()
+    )
 
 
 def dedup_keep_one(
@@ -279,38 +297,75 @@ def insert_only_parquet(
     so replayed micro-batches are no-ops — a FULL replay short-circuits
     before any write, leaving every file untouched. Returns rows written.
 
-    r14 (guide §2.4/§6): the surviving delta is APPENDED, never merged
-    into a full-table rewrite — set-insert is the one merge algebra
-    where append IS the merge, so a micro-batch costs O(|delta|) bytes
-    written instead of O(|table|), existing files are untouched by
-    construction (partial replays included, a stronger form of the
-    replay guarantee the tests pin), and at 100 TB the per-batch cost
-    no longer grows with the index. The trade is file-count growth with
-    batch count — the standard compaction story for any append-merge
-    table (compaction_plan covers it); partition-scoped deltas land in
-    their hive partition directories exactly as before."""
+    The surviving delta is APPENDED, never merged into a full-table
+    rewrite: set-insert is the one merge algebra where append IS the
+    merge, so a micro-batch costs O(|delta|) bytes written instead of
+    O(|table|), existing files are untouched by construction (partial
+    replays included), and the per-batch cost does not grow with the
+    table. The trade is file-count growth with batch count — the
+    standard compaction story for any append-merge table
+    (compaction_plan covers it); partition-scoped deltas land in their
+    hive partition directories.
+
+    Job budget. Inside ``foreachBatch`` every action on ``source``
+    re-runs the whole micro-batch plan (file read, transform, dedup
+    state), and on a small batch each Spark job costs far more than its
+    rows, so the body runs as few jobs as it can:
+
+    1. ``source`` is materialized ONCE, by an eager ``localCheckpoint``
+       carrying an ``Observation`` of its row count and, when
+       partitioned, of the set of partition tuples it touches. An empty
+       source returns 0 here (1 job); a cold table (no ``path`` yet)
+       writes the checkpoint and returns the observed count (2 jobs).
+    2. The target is read with a pinned schema — the key and partition
+       columns, typed from ``source.schema`` — so no schema-inference
+       job runs, and the scan prunes to the observed partitions.
+    3. The anti-join is materialized by a second eager
+       ``localCheckpoint`` (its target-key side is a broadcast job of
+       its own), with the surviving row count observed on it. That
+       checkpoint stays: it cuts the lineage off the target files the
+       append then writes into, and it lets a full replay return 0
+       before any write — writing the anti-join directly would leave an
+       empty parquet file in an unpartitioned table on every replay.
+    4. The append writes the checkpoint.
+
+    So a warm batch costs 4 jobs and a full replay 3."""
+    seen = Observation()
+    metrics = [F.count(F.lit(1)).alias("rows")]
+    if partition_by:
+        metrics.append(F.collect_set(F.struct(*partition_by)).alias("parts"))
+    batch = source.observe(seen, *metrics).localCheckpoint(eager=True)
+    stats = seen.get
+    if stats["rows"] == 0:
+        return 0
     if not path_exists(spark, path):
-        new_rows = source.localCheckpoint(eager=True)
-        n = new_rows.count()
-        writer = new_rows.write.mode("overwrite")
+        writer = batch.write.mode("overwrite")
+        n = stats["rows"]
     else:
-        target = spark.read.parquet(path)
+        cols = [*keys, *(c for c in partition_by or () if c not in keys)]
+        target = spark.read.schema(
+            StructType([source.schema[c] for c in cols])
+        ).parquet(path)
         if partition_by:
-            target = target.filter(source_partition_filter(source, partition_by))
+            target = target.filter(partition_predicate(partition_by, stats["parts"]))
         # NULL-SAFE anti-join: a plain key equi-join never matches
         # NULL == NULL, so a replayed micro-batch would re-insert every
         # NULL-keyed row (e.g. a histogram sink bin=NULL count) on every
         # recovery — breaking the exactly-once contract exactly for the
-        # rows a plain join can't see
-        tgt = target.select(*keys).distinct()
-        cond = None
-        for k in keys:
-            c = source[k].eqNullSafe(tgt[k])
-            cond = c if cond is None else cond & c
-        # the eager checkpoint both breaks lineage off the target files
-        # and lets count + write share one computation of the anti-join
-        new_rows = source.join(tgt, cond, "left_anti").localCheckpoint(eager=True)
-        n = new_rows.count()
+        # rows a plain join can't see. The target's keys are not
+        # deduplicated first: an anti-join's result does not depend on
+        # repeated keys, and a distinct would add a shuffle job.
+        tgt = target.select(*keys)
+        cond = functools.reduce(
+            lambda a, b: a & b, (batch[k].eqNullSafe(tgt[k]) for k in keys)
+        )
+        kept = Observation()
+        new_rows = (
+            batch.join(tgt, cond, "left_anti")
+            .observe(kept, F.count(F.lit(1)).alias("rows"))
+            .localCheckpoint(eager=True)
+        )
+        n = kept.get["rows"]
         if n == 0:
             return 0
         writer = new_rows.write.mode("append")

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
@@ -387,16 +387,20 @@ def start_merge_sink(
     """T4/D3: foreachBatch insert-only merge -> replayed batches no-op.
 
     With ``partition_by`` the merge body is partition-scoped (only the
-    batch's partitions are read and dynamically overwritten — O(batch)
-    work per micro-batch, the reference's event_date contract); with
-    Iceberg/Delta the body becomes a catalog MERGE INTO and nothing else
-    changes.
+    batch's partitions of the target are read, and the new rows are
+    appended into them — O(batch) work per micro-batch, the reference's
+    event_date contract); with Iceberg/Delta the body becomes a catalog
+    MERGE INTO and nothing else changes.
+
+    The body is :func:`insert_only_parquet` alone, with no emptiness
+    guard in front: every action on ``batch_df`` re-runs the micro-batch
+    plan, and the merge materializes the batch once and returns on an
+    empty one in that same job. A data trigger into an existing table
+    costs 4 Spark jobs, the first (cold) one 2, and a no-data trigger 1.
     """
     spark = stream_df.sparkSession
 
     def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
         insert_only_parquet(
             spark, target_path, batch_df, keys, partition_by=partition_by
         )
@@ -515,21 +519,25 @@ def start_validated_merge_sink(
     append would duplicate quarantined rows on replay and break the
     exactly-once story). The batch is split once from a cached local
     evaluation inside foreachBatch: batch_df is a static DataFrame
-    there, so the valid/invalid branches don't re-read the source."""
+    there, so the valid/invalid branches don't re-read the source. That
+    one evaluation also observes the row count, so an empty micro-batch
+    returns after 1 job and a data micro-batch is read once."""
     spark = stream_df.sparkSession
 
     def _gate_and_merge(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
+        seen = Observation()
+        flagged = (
+            batch_df.withColumn("__valid", valid)
+            .observe(seen, F.count(F.lit(1)).alias("rows"))
+            .localCheckpoint(eager=True)
+        )
+        if seen.get["rows"] == 0:
             return
-        flagged = batch_df.withColumn("__valid", valid).localCheckpoint(eager=True)
         bad = flagged.filter(~F.col("__valid")).drop("__valid")
         good = flagged.filter(F.col("__valid")).drop("__valid")
-        if bad.take(1):
-            insert_only_parquet(spark, dlq_path, bad, keys)
-        if good.take(1):
-            insert_only_parquet(
-                spark, target_path, good, keys, partition_by=partition_by
-            )
+        # an empty side returns 0 from the merge's one materializing job
+        insert_only_parquet(spark, dlq_path, bad, keys)
+        insert_only_parquet(spark, target_path, good, keys, partition_by=partition_by)
 
     writer = (
         stream_df.writeStream.foreachBatch(_gate_and_merge)
@@ -700,7 +708,9 @@ def start_mergeable_sink(
     spark = stream_df.sparkSession
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):  # empty micro-batch: skip the merge pass
+        # empty micro-batch: skip the merge pass (register-max would
+        # collect and rewrite the whole register table for nothing)
+        if not batch_df.take(1):
             return
         mergeable_commit(
             spark,
