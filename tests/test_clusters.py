@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import uuid
+
 from wikistream_event_data_pipeline_aws_spark.operators.clusters import (
     connected_components,
 )
@@ -38,3 +40,19 @@ def test_empty_edge_list(spark):
 def test_reversed_and_duplicate_edges_are_normalized(spark):
     out = _labels(connected_components(_pairs(spark, [(2, 1), (1, 2), (2, 1)])))
     assert out == {1: 1, 2: 1}
+
+
+def test_rounds_observe_their_convergence_sum(spark):
+    # Every checkpoint observes its row count and label sum on its own
+    # job, so no emptiness probe or per-round sum job runs. The graph
+    # takes two rounds (the second confirms the fixpoint).
+    sc = spark.sparkContext
+    group = f"cc-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = connected_components(_pairs(spark, [(1, 2), (2, 3), (40, 50)]))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 15
+    assert _labels(out) == {1: 1, 2: 1, 3: 1, 40: 40, 50: 40}

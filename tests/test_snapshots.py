@@ -32,6 +32,16 @@ def test_append_then_overwrite_snapshot_isolation(spark, table):
     assert [h["n_rows"] for h in snap.snapshot_history(table)] == [10, 15, 2]
 
 
+def test_manifest_n_rows_is_observed_on_the_commit_write(spark, table):
+    # n_rows is counted on the commit's own write, not read back; an
+    # append's manifest carries the running total
+    snap.snapshot_write(spark, table, _df(spark, 0, 10))
+    snap.snapshot_write(spark, table, _df(spark, 0, 5).filter("k < 0"))
+    snap.snapshot_write(spark, table, _df(spark, 20, 24), mode="overwrite")
+    assert [snap.read_manifest(table, v)["n_rows"] for v in (1, 2, 3)] == [10, 10, 4]
+    assert snap.read_snapshot(spark, table, 2).count() == 10
+
+
 def test_rollback_is_metadata_only(spark, table):
     snap.snapshot_write(spark, table, _df(spark, 0, 10))
     snap.snapshot_write(spark, table, _df(spark, 10, 20))

@@ -8,7 +8,8 @@ single partition, with no ``repartition(1)`` shuffle. A warm
 keys with a pinned schema and checkpoints the anti-join: 4 jobs, 3 for a
 full replay, so a streaming drain into it costs 2 jobs for its first
 trigger and 4 for each later one. Jobs are counted per job group through
-``sc.statusTracker()``.
+``sc.statusTracker()``. Every streaming sink reads each micro-batch once:
+its ``numInputRows`` equal the rows its source files hold.
 """
 
 from __future__ import annotations
@@ -30,9 +31,17 @@ from wikistream_event_data_pipeline_aws_spark.operators.merge import (
     insert_only_parquet,
     upsert_parquet,
 )
+from wikistream_event_data_pipeline_aws_spark.operators.snapshots import read_snapshot
 from wikistream_event_data_pipeline_aws_spark.streaming.ingest import (
     file_stream,
+    hll_batch_registers,
+    start_ann_signature_sink,
+    start_hll_sink,
+    start_histogram_sink,
     start_merge_sink,
+    start_postings_sink,
+    start_scd2_sink,
+    start_snapshot_sink,
     start_validated_merge_sink,
 )
 
@@ -162,14 +171,98 @@ def test_merge_sink_drain_job_budget(spark, tmp_path):
     assert sorted(keys) == sorted(10 * i + j for i in range(3) for j in range(4))
 
 
-def test_validated_merge_sink_reads_each_batch_once(spark, tmp_path):
-    q = start_validated_merge_sink(
-        _landing(spark, tmp_path), str(tmp_path / "bronze"), str(tmp_path / "dlq"),
-        ["k"], str(tmp_path / "ckpt"), valid=F.col("k") % 2 == 0,
-        trigger={"availableNow": True}, partition_by=["pt"],
+_NOW = {"availableNow": True}
+
+
+def _scd2(spark, stream, out, ckpt):
+    spark.createDataFrame(
+        [(0, "old", "2024-01-01", "9999-12-31", True)],
+        "k long, v string, valid_from string, valid_to string, is_current boolean",
+    ).write.parquet(out)
+    eff = F.when(F.col("pt") == "d0", "2024-01-02").otherwise("2024-01-03")
+    return start_scd2_sink(
+        stream.select("k", "v", eff.alias("eff")), out, ["k"], ["v"], ckpt,
+        eff_date_col="eff", trigger=_NOW,
     )
+
+
+def _ann(spark, stream, out, ckpt):
+    vecs = stream.withColumn("embedding", F.array(F.col("k").cast("double"), F.lit(1.0)))
+    return start_ann_signature_sink(vecs, out, ckpt, dim=2, id_col="k", trigger=_NOW)
+
+
+def _registers(df):
+    return sorted(map(tuple, df.select("bucket", "M").collect()))
+
+
+def _keys(df):
+    return sorted({r.k for r in df.collect()})
+
+
+# sink -> (start(spark, stream, out, ckpt), landed(spark, out), expected(batch),
+# jobs), where ``batch`` is the landing directory read as one static DataFrame
+# and ``jobs`` the drain's budget (the ``streaming/ingest.py`` docstring's
+# per-trigger counts over a first and two later triggers)
+_SINKS = {
+    "validated": (
+        lambda spark, stream, out, ckpt: start_validated_merge_sink(
+            stream, out, out + "_dlq", ["k"], ckpt, valid=F.col("k") % 2 == 0,
+            trigger=_NOW, partition_by=["pt"],
+        ),
+        lambda spark, out: [_keys(spark.read.parquet(p)) for p in (out, out + "_dlq")],
+        lambda batch: [_keys(batch.filter(F.col("k") % 2 == parity)) for parity in (0, 1)],
+        23,
+    ),
+    "snapshot": (
+        lambda spark, stream, out, ckpt: start_snapshot_sink(stream, out, ckpt, trigger=_NOW),
+        lambda spark, out: read_snapshot(spark, out).count(),
+        lambda batch: batch.count(),
+        6,
+    ),
+    "postings": (
+        lambda spark, stream, out, ckpt: start_postings_sink(
+            stream, out, ckpt, id_col="k", text_col="v", trigger=_NOW
+        ),
+        lambda spark, out: _keys(spark.read.parquet(out).withColumnRenamed("doc_id", "k")),
+        _keys,
+        13,
+    ),
+    "histogram": (
+        lambda spark, stream, out, ckpt: start_histogram_sink(
+            stream, out, "k", 0.0, 32.0, ckpt, n_bins=4, trigger=_NOW
+        ),
+        lambda spark, out: spark.read.parquet(out).agg(F.sum("cnt")).first()[0],
+        lambda batch: batch.count(),
+        13,
+    ),
+    "ann_signature": (
+        _ann,
+        lambda spark, out: spark.read.parquet(out).count(),
+        lambda batch: 3 * batch.select("k").distinct().count(),  # one row per table
+        10,
+    ),
+    "hll": (
+        lambda spark, stream, out, ckpt: start_hll_sink(stream, out, "k", "t", ckpt, m=16, trigger=_NOW),
+        lambda spark, out: _registers(spark.read.parquet(out)),
+        lambda batch: _registers(hll_batch_registers(batch, "k", "t", 16)),
+        10,
+    ),
+    "scd2": (
+        _scd2,
+        lambda spark, out: _keys(spark.read.parquet(out).filter("is_current")),
+        _keys,
+        68,  # two effective dates per batch
+    ),
+}
+
+
+@pytest.mark.parametrize("sink", list(_SINKS))
+def test_sink_reads_each_batch_once(spark, tmp_path, sink):
+    start, landed, expected, jobs = _SINKS[sink]
+    q = start(spark, _landing(spark, tmp_path), str(tmp_path / "out"), str(tmp_path / "ckpt"))
     q.awaitTermination()
+    assert len(_group_jobs(spark, str(q.runId))) <= jobs
+    # a guard or a second action on batch_df would read its files again
     assert sum(p["numInputRows"] for p in q.recentProgress) == 14
-    good = sorted(r.k for r in spark.read.parquet(str(tmp_path / "bronze")).collect())
-    bad = sorted(r.k for r in spark.read.parquet(str(tmp_path / "dlq")).collect())
-    assert (good, bad) == ([0, 2, 10, 12, 20, 22], [1, 3, 11, 13, 21, 23])
+    batch = spark.read.parquet(str(tmp_path / "landing"))
+    assert landed(spark, str(tmp_path / "out")) == expected(batch)

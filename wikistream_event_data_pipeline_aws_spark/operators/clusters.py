@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .merge import materialize
+
 
 def connected_components(
     pairs: DataFrame,
@@ -60,31 +62,29 @@ def connected_components(
     # smallest reachable label — does not depend on the start point as
     # long as label₀ ≤ node and label₀ is reachable, which min over the
     # closed neighborhood guarantees)
-    labels = (
+    label_sum = F.sum("label").alias("label_sum")
+    labels, stats = materialize(
         edges.groupBy(F.col("src").alias("node"))
         .agg(F.min("dst").alias("__mn"))
-        .select("node", F.least("node", "__mn").alias("label"))
-        .localCheckpoint(eager=True)
+        .select("node", F.least("node", "__mn").alias("label")),
+        label_sum,
     )
-    if not labels.take(1):
+    if stats["rows"] == 0:
         return labels
 
     # min-propagation is monotone: the label sum strictly decreases each
     # round until the fixpoint, so an unchanged sum IS convergence — a
-    # single scalar aggregate instead of a change-detection join.
-    prev_sum = labels.agg(F.sum("label")).first()[0]
+    # scalar observed on each round's checkpoint job instead of a
+    # change-detection join.
     for _ in range(max_iterations):
+        prev_sum = stats["label_sum"]
         prop = edges.join(labels, F.col("src") == F.col("node")).select(
             F.col("dst").alias("node"), "label"
         )
-        labels = (
-            labels.unionByName(prop)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
+        labels, stats = materialize(
+            labels.unionByName(prop).groupBy("node").agg(F.min("label").alias("label")),
+            label_sum,
         )
-        label_sum = labels.agg(F.sum("label")).first()[0]
-        if label_sum == prev_sum:
+        if stats["label_sum"] == prev_sum:
             return labels
-        prev_sum = label_sum
     raise RuntimeError(f"connected_components: no fixpoint in {max_iterations} rounds")

@@ -40,6 +40,7 @@ with a pinned schema (no inference job); and the anti-join keeps its own
 eager checkpoint, which cuts the lineage off the files the append writes
 into and lets a full replay return before any write. A warm batch runs 4
 jobs, a full replay 3, a cold table's first batch 2, an empty batch 1.
+:func:`materialize` is that one materialize-and-observe step.
 """
 
 from __future__ import annotations
@@ -63,6 +64,19 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return fs.exists(hadoop_path)
 
 
+def materialize(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
+    """Pin ``df`` with one eager ``localCheckpoint``, observing
+    ``count(1) AS rows`` and the aggregate ``metrics`` on that job.
+    Returns the pin and the observed values by name. A second action on
+    a ``foreachBatch`` batch would re-read its files; reading them once
+    here keeps the query's ``numInputRows`` equal to the rows landed."""
+    seen = Observation()
+    pinned = df.observe(seen, F.count(F.lit(1)).alias("rows"), *metrics).localCheckpoint(
+        eager=True
+    )
+    return pinned, seen.get
+
+
 def partition_predicate(partition_by: Sequence[str], tuples: Sequence) -> Column:
     """Pruning predicate selecting exactly the partitions in ``tuples``
     (one value per ``partition_by`` column each, in that order; a NULL
@@ -80,16 +94,6 @@ def partition_predicate(partition_by: Sequence[str], tuples: Sequence) -> Column
         return functools.reduce(lambda a, b: a & b, terms)
 
     return functools.reduce(lambda a, b: a | b, (one(t) for t in tuples))
-
-
-def source_partition_filter(source: DataFrame, partition_by: Sequence[str]) -> Column:
-    """:func:`partition_predicate` over the partitions present in
-    ``source``. The distinct partition-tuple list is collected in one
-    job (one row per touched partition — bounded by the batch's date
-    spread, not by data volume)."""
-    return partition_predicate(
-        partition_by, source.select(*partition_by).distinct().collect()
-    )
 
 
 def dedup_keep_one(
@@ -218,8 +222,8 @@ def repair_dedup(
     row_number form of W2, which is per-key by construction."""
     df = spark.read.parquet(path)
     before = df.count()
-    kept = dedup_keep_one(df, keys, order_by, keep="first").localCheckpoint(eager=True)
-    after = kept.count()
+    kept, stats = materialize(dedup_keep_one(df, keys, order_by, keep="first"))
+    after = stats["rows"]
     if after != before:
         kept.write.mode("overwrite").parquet(path)
     return before, after
@@ -245,9 +249,11 @@ def upsert_parquet(
     When the checkpoint runs: only when ``path`` already exists. Those
     merges read the files they overwrite, so the merged rows are first
     materialized with an eager ``localCheckpoint`` (a lineage cut) and
-    the write reads the checkpoint. A cold merge (no table yet) reads no
-    target and writes the source, deduplicated when ``order_by`` is
-    given, straight to ``path`` in one job (plus the dedup's shuffle).
+    the write reads the checkpoint; a partitioned one first pins the
+    source with :func:`materialize`, observing the partitions it
+    touches. A cold merge (no table yet) reads no target and writes the
+    source, deduplicated when ``order_by`` is given, straight to
+    ``path`` in one job (plus the dedup's shuffle).
 
     Where the row count comes from: an ``Observation`` of ``count(1)``
     on the write itself, collected as the write runs rather than by a
@@ -265,7 +271,10 @@ def upsert_parquet(
     else:
         target = spark.read.parquet(path)
         if partition_by:
-            target = target.filter(source_partition_filter(source, partition_by))
+            source, stats = materialize(
+                source, F.collect_set(F.struct(*partition_by)).alias("parts")
+            )
+            target = target.filter(partition_predicate(partition_by, stats["parts"]))
         # break lineage before overwriting the path we read from (cache
         # alone can be evicted and recompute against the clobbered files)
         merged = merge_upsert(target, source, keys, order_by).localCheckpoint(
@@ -312,30 +321,26 @@ def insert_only_parquet(
     state), and on a small batch each Spark job costs far more than its
     rows, so the body runs as few jobs as it can:
 
-    1. ``source`` is materialized ONCE, by an eager ``localCheckpoint``
-       carrying an ``Observation`` of its row count and, when
-       partitioned, of the set of partition tuples it touches. An empty
-       source returns 0 here (1 job); a cold table (no ``path`` yet)
-       writes the checkpoint and returns the observed count (2 jobs).
+    1. ``source`` is materialized ONCE by :func:`materialize`, which
+       observes its row count and, when partitioned, the set of
+       partition tuples it touches. An empty source returns 0 here (1
+       job); a cold table (no ``path`` yet) writes the checkpoint and
+       returns the observed count (2 jobs).
     2. The target is read with a pinned schema — the key and partition
        columns, typed from ``source.schema`` — so no schema-inference
        job runs, and the scan prunes to the observed partitions.
-    3. The anti-join is materialized by a second eager
-       ``localCheckpoint`` (its target-key side is a broadcast job of
-       its own), with the surviving row count observed on it. That
-       checkpoint stays: it cuts the lineage off the target files the
-       append then writes into, and it lets a full replay return 0
-       before any write — writing the anti-join directly would leave an
-       empty parquet file in an unpartitioned table on every replay.
+    3. The anti-join is materialized by a second :func:`materialize`
+       (its target-key side is a broadcast job of its own), which
+       observes the surviving row count. That checkpoint stays: it
+       cuts the lineage off the target files the append then writes
+       into, and it lets a full replay return 0 before any write —
+       writing the anti-join directly would leave an empty parquet file
+       in an unpartitioned table on every replay.
     4. The append writes the checkpoint.
 
     So a warm batch costs 4 jobs and a full replay 3."""
-    seen = Observation()
-    metrics = [F.count(F.lit(1)).alias("rows")]
-    if partition_by:
-        metrics.append(F.collect_set(F.struct(*partition_by)).alias("parts"))
-    batch = source.observe(seen, *metrics).localCheckpoint(eager=True)
-    stats = seen.get
+    parts = [F.collect_set(F.struct(*partition_by)).alias("parts")] if partition_by else []
+    batch, stats = materialize(source, *parts)
     if stats["rows"] == 0:
         return 0
     if not path_exists(spark, path):
@@ -359,13 +364,8 @@ def insert_only_parquet(
         cond = functools.reduce(
             lambda a, b: a & b, (batch[k].eqNullSafe(tgt[k]) for k in keys)
         )
-        kept = Observation()
-        new_rows = (
-            batch.join(tgt, cond, "left_anti")
-            .observe(kept, F.count(F.lit(1)).alias("rows"))
-            .localCheckpoint(eager=True)
-        )
-        n = kept.get["rows"]
+        new_rows, kept = materialize(batch.join(tgt, cond, "left_anti"))
+        n = kept["rows"]
         if n == 0:
             return 0
         writer = new_rows.write.mode("append")

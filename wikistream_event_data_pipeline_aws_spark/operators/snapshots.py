@@ -42,8 +42,10 @@ import re
 from functools import reduce
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from .merge import materialize
 
 MANIFEST_DIR = "manifests"
 DATA_DIR = "data"
@@ -134,6 +136,16 @@ def _data_files(commit_dir: str) -> list[str]:
     )
 
 
+def _write_counted(df: DataFrame, commit_dir: str) -> int:
+    """Write ``df`` as the parquet files of ``commit_dir``; return its
+    row count, observed on the write itself (no read-back job)."""
+    written = Observation()
+    df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(
+        commit_dir
+    )
+    return written.get["rows"]
+
+
 def snapshot_write(
     spark: SparkSession,
     path: str,
@@ -155,12 +167,9 @@ def snapshot_write(
     parent = current_version(path)
     version = (parent or 0) + 1
     commit_dir = _commit_dir(path, f"commit-v{version:06d}")
-    df.write.mode("overwrite").parquet(commit_dir)
+    n_rows = _write_counted(df, commit_dir)
     new_files = _data_files(commit_dir)
     files = list(new_files)
-    # count only the NEW files (footer-level metadata scan); the total
-    # folds in the parent's committed count — no full-table re-read
-    n_rows = spark.read.parquet(*new_files).count() if new_files else 0
     manifest = {
         "version": version,
         "parent": parent,
@@ -506,7 +515,7 @@ def materialize_deletes(spark: SparkSession, path: str) -> int:
     parent = current_version(path)
     if parent is None:
         raise FileNotFoundError(f"no snapshots at {path}")
-    merged = read_snapshot(spark, path, parent).localCheckpoint(eager=True)
+    merged, stats = materialize(read_snapshot(spark, path, parent))
     version = parent + 1
     commit_dir = _commit_dir(path, f"commit-v{version:06d}")
     merged.write.mode("overwrite").parquet(commit_dir)
@@ -520,7 +529,7 @@ def materialize_deletes(spark: SparkSession, path: str) -> int:
             "operation": "rewrite-materialize-deletes",
             "files": files,
             "file_seqs": {f: version for f in files},
-            "n_rows": merged.count(),
+            "n_rows": stats["rows"],
         },
     )
     return version
@@ -625,9 +634,8 @@ def snapshot_stage(
         ) from None
     try:
         commit_dir = os.path.join(path, DATA_DIR, f"staged-{staging_id}")
-        df.write.mode("overwrite").parquet(commit_dir)
+        n_rows = _write_counted(df, commit_dir)
         new_files = _data_files(commit_dir)
-        n_rows = spark.read.parquet(*new_files).count() if new_files else 0
         # sole owner of the claim file now — fill it in place
         with open(target, "w") as f:
             json.dump(

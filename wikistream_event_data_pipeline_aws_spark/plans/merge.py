@@ -316,7 +316,7 @@ def scd2_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..streaming.ingest import file_stream, start_scd2_sink
+    from ..streaming.ingest import await_drain, file_stream, start_scd2_sink
 
     # The CDC batches and the seeded dimension are deterministic
     # functions of the customer table — build them ONCE per table version
@@ -343,10 +343,7 @@ def scd2_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 checkpoint_dir=ckpt,
                 trigger={"availableNow": True},
             )
-            q.awaitTermination(300)
-            if q.isActive:
-                q.stop()
-                raise TimeoutError("scd2 stream did not finish in 300s")
+            await_drain(q, "scd2 stream")
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
 

@@ -1101,13 +1101,13 @@ def streaming_ann_index_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Replay idempotency is pinned separately in the streaming tests."""
     import tempfile
 
-    from ..streaming.ingest import file_stream, start_ann_signature_sink
+    from ..streaming.ingest import await_drain, file_stream, start_ann_signature_sink
 
     e = load_table(spark, sf_dir, "embeddings")
     src = _ann_sig_stream_src(spark, sf_dir)
     with tempfile.TemporaryDirectory(prefix="annsig_stream_", ignore_cleanup_errors=True) as tmp:
         sig_path, ckpt = f"{tmp}/sigs", f"{tmp}/ckpt"
-        schema = spark.read.parquet(src).schema
+        schema = e.select("vec_id", "embedding").schema
         stream = file_stream(spark, src, schema, max_files_per_trigger=1)
         q = start_ann_signature_sink(
             stream,
@@ -1118,10 +1118,7 @@ def streaming_ann_index_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_tables=N_TABLES,
             trigger={"availableNow": True},
         )
-        q.awaitTermination(300)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError("ann signature stream did not finish in 300s")
+        await_drain(q, "ann signature stream")
         sigs = spark.read.parquet(sig_path)
         qs = sigs.filter(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"), "table", "bucket"

@@ -777,7 +777,7 @@ def streaming_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned separately in the invariant tests."""
     import tempfile
 
-    from ..streaming.ingest import file_stream, start_hll_sink
+    from ..streaming.ingest import await_drain, file_stream, start_hll_sink
 
     with tempfile.TemporaryDirectory(prefix="hll_stream_", ignore_cleanup_errors=True) as tmp:
         regs_path, ckpt = f"{tmp}/regs", f"{tmp}/ckpt"
@@ -793,10 +793,7 @@ def streaming_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             m=HLL_M,
             trigger={"availableNow": True},
         )
-        q.awaitTermination(300)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError("hll stream did not finish in 300s")
+        await_drain(q, "hll stream")
 
         regs = spark.read.parquet(regs_path)
         a = regs.agg(
@@ -879,7 +876,7 @@ def streaming_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
     n_batches x B rows, compactable by summing — never data-sized."""
     import tempfile
 
-    from ..streaming.ingest import file_stream, start_histogram_sink
+    from ..streaming.ingest import await_drain, file_stream, start_histogram_sink
 
     e = load_table(spark, sf_dir, "events").select("event_id", "value")
     mm = e.agg(F.min("value").alias("mn"), F.max("value").alias("mx")).first()
@@ -901,10 +898,7 @@ def streaming_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame
             n_bins=HIST_BINS,
             trigger={"availableNow": True},
         )
-        q.awaitTermination(300)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError("histogram stream did not finish in 300s")
+        await_drain(q, "histogram stream")
 
         hist = (
             spark.read.parquet(bins_path)

@@ -28,9 +28,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..operators.memo import session_memo
 from ..session import ensure_session_confs
-from ..streaming.ingest import stateful_user_counts, watermark_dedup
-
-_AWAIT_S = 300
+from ..streaming.ingest import await_drain, stateful_user_counts, watermark_dedup
 
 # Stateful streaming operators keep one state-store instance per shuffle
 # partition; on the local test harness the per-partition store overhead
@@ -101,10 +99,7 @@ def _run_to_memory(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(_AWAIT_S)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(f"streaming query {name} did not finish in {_AWAIT_S}s")
+        await_drain(q, f"streaming query {name}")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb)

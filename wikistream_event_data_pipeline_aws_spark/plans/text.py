@@ -441,7 +441,7 @@ def streaming_postings_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Replay idempotency is pinned separately in the streaming tests."""
     import tempfile
 
-    from ..streaming.ingest import file_stream, start_postings_sink
+    from ..streaming.ingest import await_drain, file_stream, start_postings_sink
 
     src = _postings_stream_src(spark, sf_dir)
     with tempfile.TemporaryDirectory(prefix="postings_stream_", ignore_cleanup_errors=True) as tmp:
@@ -452,10 +452,7 @@ def streaming_postings_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = start_postings_sink(
             stream, postings_path, checkpoint_dir=ckpt, trigger={"availableNow": True}
         )
-        q.awaitTermination(300)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError("postings stream did not finish in 300s")
+        await_drain(q, "postings stream")
         postings = spark.read.parquet(postings_path).select("doc_id", "token")
         # materialize the small readout so the scratch dir can go now
         return _index_topk_from_postings(postings).localCheckpoint(eager=True)
@@ -1399,7 +1396,7 @@ def streaming_entropy_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_batches grows; the per-batch delta agg is map-side."""
     import tempfile
 
-    from ..streaming.ingest import file_stream, start_mergeable_sink
+    from ..streaming.ingest import await_drain, file_stream, start_mergeable_sink
 
     src = _entropy_stream_src(spark, sf_dir)
     with tempfile.TemporaryDirectory(prefix="entropy_stream_", ignore_cleanup_errors=True) as tmp:
@@ -1430,10 +1427,7 @@ def streaming_entropy_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             keys=["batch_id", "source", "token"],
             trigger={"availableNow": True},
         )
-        q.awaitTermination(300)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError("entropy stream did not finish in 300s")
+        await_drain(q, "entropy stream")
         state = spark.read.parquet(state_path)
         cell = state.groupBy("source", "token").agg(F.sum("cnt").alias("c"))
         return _entropy_kl_from_cells(cell).localCheckpoint(eager=True)

@@ -22,6 +22,15 @@ form); the same functions run in batch mode for oracle checks. The
 per-key session ROLLUP here is batch-only (it chains two aggregations);
 the streaming session-window form is the single-aggregation
 ``plans/streaming_live.streaming_session_window``.
+
+Every sink reads its micro-batch once (each action inside
+``foreachBatch`` re-reads the source files): the first job that needs
+the rows pins them (``operators.merge.materialize``), writes or collects
+them, and observes what the body needs on that job, so ``numInputRows``
+equals the rows landed. Spark jobs per trigger as data / first data /
+full replay / empty, each shuffle its own job: merge 4/2/3/1, validated
+9/5/7/1, snapshot 2/2/0/1, postings and histogram 5/3/4/1, ANN signature
+4/2/3/1, HLL 4/2/4/4, scd2 1 + ~10 per effective date / same / 1.
 """
 
 from __future__ import annotations
@@ -33,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from ..operators.merge import insert_only_parquet, path_exists, scd2_apply
+from ..operators.merge import insert_only_parquet, materialize, path_exists, scd2_apply
 
 
 # -- sources ------------------------------------------------------------------
@@ -376,6 +385,34 @@ def stateful_user_counts_tws(df: DataFrame, key: str = "user_id") -> DataFrame:
 # -- sink ---------------------------------------------------------------------
 
 
+def _start(
+    stream_df: DataFrame,
+    body,
+    checkpoint_dir: str,
+    trigger: dict | None,
+    output_mode: str = "update",
+) -> StreamingQuery:
+    """Start ``body(batch_df, batch_id)`` as the query's checkpointed
+    ``foreachBatch`` sink — the one writer every sink here shares."""
+    writer = (
+        stream_df.writeStream.foreachBatch(body)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode(output_mode)
+    )
+    if trigger:
+        writer = writer.trigger(**trigger)
+    return writer.start()
+
+
+def await_drain(q: StreamingQuery, name: str) -> None:
+    """Wait for an ``availableNow`` query to drain its source; stop it
+    and raise ``TimeoutError`` if it is still active after 300 s."""
+    q.awaitTermination(300)
+    if q.isActive:
+        q.stop()
+        raise TimeoutError(f"{name} did not finish in 300s")
+
+
 def start_merge_sink(
     stream_df: DataFrame,
     target_path: str,
@@ -396,7 +433,8 @@ def start_merge_sink(
     guard in front: every action on ``batch_df`` re-runs the micro-batch
     plan, and the merge materializes the batch once and returns on an
     empty one in that same job. A data trigger into an existing table
-    costs 4 Spark jobs, the first (cold) one 2, and a no-data trigger 1.
+    costs 4 Spark jobs, the first (cold) one 2, a full replay 3 and an
+    empty trigger 1.
     """
     spark = stream_df.sparkSession
 
@@ -405,14 +443,7 @@ def start_merge_sink(
             spark, target_path, batch_df, keys, partition_by=partition_by
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start(stream_df, _merge_batch, checkpoint_dir, trigger)
 
 
 def start_scd2_sink(
@@ -457,19 +488,21 @@ def start_scd2_sink(
     The dim rewrite is copy-on-write on plain parquet (bounded by dim
     size, not stream volume); an Iceberg/Delta backend would MERGE with
     file pruning, and a date-bucketed history table would make the
-    rewrite partition-scoped like upsert_parquet."""
+    rewrite partition-scoped like upsert_parquet. Jobs per trigger: 1
+    to pin the batch and observe its dates (all when empty), then ~10
+    per effective date to rewrite the dim (11 for one date, a replay
+    alike)."""
     spark = stream_df.sparkSession
 
     def _apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
+        batch, stats = materialize(
+            batch_df, F.array_sort(F.collect_set(eff_date_col)).alias("effs")
+        )
+        if not stats["effs"]:  # empty, or only NULL dates (no update)
             return
-        effs = [
-            r[0]
-            for r in batch_df.select(eff_date_col).distinct().orderBy(eff_date_col).collect()
-        ]
         dim = spark.read.parquet(dim_path)
-        for eff in effs:
-            updates = batch_df.filter(F.col(eff_date_col) == eff).select(*keys, *attrs)
+        for eff in stats["effs"]:
+            updates = batch.filter(F.col(eff_date_col) == eff).select(*keys, *attrs)
             # late-update guard: drop updates not strictly newer than the
             # key's current version (ISO date strings compare lexically)
             cur_from = dim.filter(F.col("is_current")).select(
@@ -492,14 +525,7 @@ def start_scd2_sink(
             f"dim_path {dim_path!r} must be seeded with the initial dimension "
             "(write the current rows with valid_from/valid_to/is_current first)"
         )
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start(stream_df, _apply_batch, checkpoint_dir, trigger)
 
 
 def start_validated_merge_sink(
@@ -521,17 +547,13 @@ def start_validated_merge_sink(
     evaluation inside foreachBatch: batch_df is a static DataFrame
     there, so the valid/invalid branches don't re-read the source. That
     one evaluation also observes the row count, so an empty micro-batch
-    returns after 1 job and a data micro-batch is read once."""
+    returns after 1 job and a data micro-batch is read once: 9 jobs per
+    data trigger, 5 into cold tables, 7 on a full replay."""
     spark = stream_df.sparkSession
 
     def _gate_and_merge(batch_df: DataFrame, batch_id: int) -> None:
-        seen = Observation()
-        flagged = (
-            batch_df.withColumn("__valid", valid)
-            .observe(seen, F.count(F.lit(1)).alias("rows"))
-            .localCheckpoint(eager=True)
-        )
-        if seen.get["rows"] == 0:
+        flagged, stats = materialize(batch_df.withColumn("__valid", valid))
+        if stats["rows"] == 0:
             return
         bad = flagged.filter(~F.col("__valid")).drop("__valid")
         good = flagged.filter(F.col("__valid")).drop("__valid")
@@ -539,14 +561,7 @@ def start_validated_merge_sink(
         insert_only_parquet(spark, dlq_path, bad, keys)
         insert_only_parquet(spark, target_path, good, keys, partition_by=partition_by)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_gate_and_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start(stream_df, _gate_and_merge, checkpoint_dir, trigger)
 
 
 def start_snapshot_sink(
@@ -570,7 +585,8 @@ def start_snapshot_sink(
     checkpoints alone cannot close for a non-transactional sink. A
     replayed batch whose label already exists in the (KB-sized)
     manifest history is skipped wholesale; readers meanwhile get
-    snapshot isolation per micro-batch commit."""
+    snapshot isolation per micro-batch commit. Jobs per trigger: 1 to
+    pin the batch (all when empty), 1 to commit it, 0 on a replay."""
     from ..operators.snapshots import committed_operations, snapshot_write
 
     spark = stream_df.sparkSession
@@ -588,19 +604,13 @@ def start_snapshot_sink(
         tag = f"stream-batch-{batch_id}"
         if tag in seen:
             return
-        if not batch_df.take(1):
+        batch, stats = materialize(batch_df)
+        if stats["rows"] == 0:
             return
-        snapshot_write(spark, table_path, batch_df, mode="append", operation=tag)
+        snapshot_write(spark, table_path, batch, mode="append", operation=tag)
         seen.add(tag)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start(stream_df, _commit, checkpoint_dir, trigger, output_mode="append")
 
 
 def _atomic_write_registers(rows: list, target_path: str) -> None:
@@ -669,19 +679,22 @@ def mergeable_commit(
 ) -> None:
     """Merge one micro-batch's state delta into the persistent table —
     the testable per-batch body of :func:`start_mergeable_sink` (the
-    replay ⇒ fixed-point property tests drive this directly)."""
+    replay ⇒ fixed-point property tests drive this directly). Either
+    algebra reads the delta once; register-max observes its row count on
+    the collect and skips the rewrite of an empty delta."""
     if algebra == "set-insert":
         insert_only_parquet(spark, path, delta, keys=list(keys))
     elif algebra == "register-max":
         if max_col is None:
             raise ValueError("register-max needs max_col")
+        seen = Observation()
+        merged = delta.observe(seen, F.count(F.lit(1)).alias("rows"))
         if path_exists(spark, path):
-            delta = delta.unionByName(spark.read.parquet(path))
-        merged = delta.groupBy(*keys).agg(F.max(max_col).alias(max_col))
-        rows = merged.collect()  # bounded by construction (register state)
-        if not rows:
-            return
-        _atomic_write_registers(rows, path)
+            merged = merged.unionByName(spark.read.parquet(path))
+        # bounded by construction (register state)
+        rows = merged.groupBy(*keys).agg(F.max(max_col).alias(max_col)).collect()
+        if seen.get["rows"]:
+            _atomic_write_registers(rows, path)
     else:
         raise ValueError(f"unknown merge algebra {algebra!r}")
 
@@ -701,17 +714,16 @@ def start_mergeable_sink(
     batch_id) -> DataFrame`` derives the slim state delta (fingerprints,
     postings, bin counts, registers — never the blobs/raw rows), and
     :func:`mergeable_commit` folds it into the table under ``algebra``.
-    Empty micro-batches skip the merge pass entirely. Exactly-once is
-    the ALGEBRA's property, not the checkpoint's: a replayed batch's
-    merge is a fixed point, so crash-replay between the write and the
-    checkpoint commit cannot corrupt state."""
+    Exactly-once is the ALGEBRA's property, not the checkpoint's: a
+    replayed batch's merge is a fixed point, so crash-replay between the
+    write and the checkpoint commit cannot corrupt state. No emptiness
+    probe runs first: the merge's first job reads the lazy delta, so an
+    empty batch writes nothing. Jobs per trigger: set-insert as
+    :func:`insert_only_parquet` plus one per shuffle in the delta;
+    register-max data 4, first 2, replay 4, empty 4."""
     spark = stream_df.sparkSession
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        # empty micro-batch: skip the merge pass (register-max would
-        # collect and rewrite the whole register table for nothing)
-        if not batch_df.take(1):
-            return
         mergeable_commit(
             spark,
             path,
@@ -721,14 +733,7 @@ def start_mergeable_sink(
             max_col=max_col,
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start(stream_df, _commit, checkpoint_dir, trigger)
 
 
 def start_histogram_sink(
@@ -751,7 +756,8 @@ def start_histogram_sink(
     (bin-level compaction is a metadata rewrite when n_batches grows).
     The bin domain [mn, mx) is FIXED a priori — the standing contract
     of streaming histogram/quantile sketches (a data-dependent domain
-    would need a second pass the stream cannot take)."""
+    would need a second pass the stream cannot take). Jobs per trigger:
+    data 5, first 3, replay 4, empty 1."""
     if not mx > mn:
         # a zero/negative-width domain would make every bin expression
         # divide by zero (NULL bins) — reject at start, not per batch
@@ -813,7 +819,8 @@ def start_postings_sink(
     two paths cannot drift. State grows with the true posting count
     only; the per-batch merge is one anti-join keyed on (token,
     doc_id) — at 100 TB the target would be bucketed by token so the
-    anti-join co-locates, same as every other merge sink here."""
+    anti-join co-locates, same as every other merge sink here. Jobs per
+    trigger: data 5, first 3, replay 4, empty 1."""
     from ..operators.textops import tokenize
 
     def _delta(batch_df: DataFrame, batch_id: int) -> DataFrame:
@@ -857,7 +864,8 @@ def start_ann_signature_sink(
     top-k from the STREAMED table against the batch oracle. At scale
     the signature table is the serving-side ANN index (bucket-keyed,
     ~n_tables rows of 24 bytes per vector); the per-batch merge is one
-    anti-join on (table, vec_id)."""
+    anti-join on (table, vec_id). Jobs per trigger: data 4, first 2,
+    replay 3, empty 1."""
     from ..operators.similarity import lsh_bucket_key
 
     def _delta(batch_df: DataFrame, batch_id: int) -> DataFrame:
@@ -941,7 +949,8 @@ def start_hll_sink(
     place — a crash at any point leaves either the complete previous
     table or the complete new one, never a torn write. (A non-local
     ``registers_path`` would need the object store's own atomic-rename
-    or a manifest commit — this sink targets local/driver-side state.)"""
+    or a manifest commit — this sink targets local/driver-side state.)
+    Jobs per trigger: data 4, first 2, replay 4, empty 4."""
     def _delta(batch_df: DataFrame, batch_id: int) -> DataFrame:
         return hll_batch_registers(batch_df, key_col, seed, m)
 
